@@ -19,17 +19,21 @@ def register_all(spark) -> None:
     snapshot along (options.py ``CONF_KEYS``).  Set ``spark.dns.store``
     etc. first, then call ``register_all`` (re-calling replaces the
     registration with a fresh snapshot); explicit datasource options
-    always win over the snapshot.
+    always win over the snapshot.  The session's ``defaultParallelism``
+    rides along the same way: the ``dns`` reader plans at most that
+    many partitions.
     """
     from spark_dns_spark.sources.options import conf_snapshot
 
     snap = conf_snapshot(spark)
+    parallelism = spark.sparkContext.defaultParallelism
 
     # Dynamic subclasses so cloudpickle serializes them by value,
     # shipping the conf snapshot into the planning worker; name()
     # is inherited, so the format strings stay 'dns' / 'dns_update'.
     class _ConfiguredDnsDataSource(DnsDataSource):
         _conf_defaults = snap
+        _default_parallelism = parallelism
 
     class _ConfiguredDnsUpdateDataSource(DnsUpdateDataSource):
         _conf_defaults = snap

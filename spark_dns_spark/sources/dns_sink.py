@@ -139,7 +139,7 @@ class DnsUpdateWriter(DataSourceWriter):
             # same TCP-client failure model as the read path (bad port ⇒
             # refused); not suppressable here — the reference sink throws
             # on any send failure (DnsUpdate.java:76-80)
-            store.check_connect(self.opts.port, self.opts.timeout)
+            store.check_connect(self.opts.port)
         applied = []
         n = 0
         for zone in sorted(by_zone):

@@ -5,8 +5,14 @@ Architecture vs the reference (a Java DSv1 RelationProvider +
 hand-rolled RDD, spark/read/*.java): same observable semantics, Spark-4
 native mechanics —
 
-- one :class:`InputPartition` per zone (S3; parallel across zones,
-  serial within — the protocol constraint, README.md:5-6);
+- zones packed into at most ``defaultParallelism`` input partitions
+  (S3, adapted): the zone stays the unit of work — never split, each
+  transferred serially, the protocol constraint (README.md:5-6) — but
+  the bin is the unit of scheduling.  The reference's one partition per
+  zone (DnsZoneRDD.java:40-53) would cost one Python worker task per
+  zone, whose fixed start-up cost is far above a zone's transfer;
+  bins are filled largest zone first (LPT) by the transport's size
+  hint (:func:`pack_transfers`);
 - fixed 6-column schema in bean-encoder alphabetical order
   (``action, fqdn, ip, organization, timestamp, zone`` —
   DnsRecordToRowConverter.java:20-29); user-supplied schema is ignored
@@ -17,8 +23,9 @@ native mechanics —
 - transfer timestamp is pinned at *planning* time and shipped inside
   the partition, so task retries are deterministic (fixes the
   speculative-retry hazard of DnsZoneRDD.java:94, SURVEY.md §4);
-- ``ignore-failures`` (T7): transfer errors → log + empty partition
-  instead of task failure (DnsZoneRDD.java:82-92).
+- ``ignore-failures`` (T7): a zone's transfer error → that zone reads
+  empty instead of failing the task (DnsZoneRDD.java:82-92); the other
+  zones of its partition still deliver.
 
 Streaming (S7, T1–T5) lives in :class:`DnsStreamReader`: real
 end-of-data offsets ``{zone: serial}`` (the store supports a cheap
@@ -31,10 +38,12 @@ partitions), plus a reference-parity progress log with
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -54,7 +63,7 @@ from pyspark.sql.types import (
 )
 
 from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions
-from spark_dns_spark.sources.transport import make_transport
+from spark_dns_spark.sources.transport import ZoneTransport, make_transport
 from spark_dns_spark.sources.zonestore import ZoneNotFoundError
 
 #: Read schema — 6 columns, alphabetical (bean-encoder order parity,
@@ -82,61 +91,129 @@ WRITE_SCHEMA = StructType(
 )
 
 
-@dataclass
-class DnsZonePartition(InputPartition):
-    """S3 — one partition per zone; carries everything ``read`` needs so
-    executors never call back to the driver (DnsZonePartition.java:11-19)."""
+class ZoneTransfer(NamedTuple):
+    """One zone's transfer — the unit of work (S3): never split across
+    partitions."""
 
     zone: str
     from_serial: int  # 0 ⇒ full AXFR
     to_serial: int | None  # streaming upper bound; None ⇒ latest
     axfr: bool
+
+
+@dataclass
+class DnsZonePartition(InputPartition):
+    """S3, adapted — a bin of zones, the unit of scheduling: one task
+    runs its transfers one after another.  Carries everything ``read``
+    needs so executors never call back to the driver
+    (DnsZonePartition.java:11-19)."""
+
+    transfers: tuple[ZoneTransfer, ...]  # largest zone first
     batch_ts_us: int  # planning-time timestamp (deterministic retries)
+
+    # The lead (largest) transfer of the bin, for callers that replay a
+    # plan zone by zone (perfbench's traced replay).  They see only the
+    # first zone of a bin that holds several.
+    @property
+    def zone(self) -> str:
+        return self.transfers[0].zone
+
+    @property
+    def from_serial(self) -> int:
+        return self.transfers[0].from_serial
+
+    @property
+    def to_serial(self) -> int | None:
+        return self.transfers[0].to_serial
+
+    @property
+    def axfr(self) -> bool:
+        return self.transfers[0].axfr
+
+
+def pack_transfers(
+    transfers: list[ZoneTransfer], sizes: dict[str, int], nbins: int
+) -> list[tuple[ZoneTransfer, ...]]:
+    """Pack zone transfers into ``min(len(transfers), nbins)`` bins,
+    largest first into the least-loaded bin (LPT).  Ties keep the given
+    order and go to the lowest bin, so a store always packs the same
+    way."""
+    bins: list[list[ZoneTransfer]] = [[] for _ in range(min(len(transfers), nbins))]
+    loads = [(0, i) for i in range(len(bins))]  # sorted ⇒ already a heap
+    for t in sorted(transfers, key=lambda t: -sizes[t.zone]):
+        load, i = heapq.heappop(loads)
+        bins[i].append(t)
+        heapq.heappush(loads, (load + sizes[t.zone], i))
+    return [tuple(b) for b in bins]
+
+
+def _plan(
+    transport: ZoneTransport, transfers: list[ZoneTransfer], nbins: int
+) -> list[DnsZonePartition]:
+    ts = _now_us()
+    sizes = {t.zone: transport.size_hint(t.zone) for t in transfers}
+    return [
+        DnsZonePartition(transfers=b, batch_ts_us=ts)
+        for b in pack_transfers(transfers, sizes, nbins)
+    ]
 
 
 def _transfer_rows(opts: DnsSourceOptions, part: DnsZonePartition):
-    """S4/S5/S6 — run one zone transfer and emit schema-ordered tuples.
+    """S4/S5/S6 — run a bin's zone transfers serially and emit
+    schema-ordered tuples.
 
-    The executor-side body of DnsZoneRDD.compute (DnsZoneRDD.java:65-97):
-    transfer, suppress-or-throw, stamp constant columns.
+    The executor-side body of DnsZoneRDD.compute (DnsZoneRDD.java:65-97)
+    once per zone: transfer, suppress-or-throw, stamp constant columns.
     """
     ts = datetime.fromtimestamp(part.batch_ts_us / 1e6, tz=timezone.utc).replace(
         tzinfo=None
     )
     transport = make_transport(opts)
     try:
-        if part.zone in opts.fail_zones:  # fault injection (tests, T7)
-            raise OSError(f"simulated transfer failure for {part.zone}")
         # port/timeout behave like the reference's TCP client: wrong
-        # port refuses, simulated RTT beyond `timeout` times out — both
-        # suppressable via ignore-failures (DnsZoneRDD.java:82-92).
-        transport.check_connect(part.zone)
-        # transfer() serves from_serial==0 as a snapshot BOUNDED at
-        # to_serial, so a streaming batch planned at [0, end] stays
-        # pinned to its offsets even if the store advances before the
-        # task runs (or the task retries) — no duplicate re-delivery at
-        # the next batch.
-        res = transport.transfer(
-            part.zone, part.from_serial, part.to_serial, part.axfr
-        )
-    except (OSError, ZoneNotFoundError):
+        # port refuses, simulated RTT beyond `timeout` times out (in
+        # transfer) — both suppressable via ignore-failures
+        # (DnsZoneRDD.java:82-92).
+        transport.check_connect()
+    except OSError:
         if opts.ignore_failures:
-            return  # log+empty partition (DnsZoneRDD.java:86-91)
+            return  # no zone of the bin is reachable
         raise
-    for action, fqdn, ip in res.rows:
-        # column order = READ_SCHEMA order
-        yield (action, fqdn.lower(), ip, opts.organization, ts, part.zone)
+    for t in part.transfers:
+        try:
+            if t.zone in opts.fail_zones:  # fault injection (tests, T7)
+                raise OSError(f"simulated transfer failure for {t.zone}")
+            # transfer() serves from_serial==0 as a snapshot BOUNDED at
+            # to_serial, so a streaming batch planned at [0, end] stays
+            # pinned to its offsets even if the store advances before
+            # the task runs (or the task retries) — no duplicate
+            # re-delivery at the next batch.
+            res = transport.transfer(t.zone, t.from_serial, t.to_serial, t.axfr)
+        except (OSError, ZoneNotFoundError):
+            if opts.ignore_failures:
+                continue  # log+empty zone (DnsZoneRDD.java:86-91)
+            raise
+        for action, fqdn, ip in res.rows:
+            # column order = READ_SCHEMA order
+            yield (action, fqdn.lower(), ip, opts.organization, ts, t.zone)
 
 
 def _now_us() -> int:
     return int(datetime.now(tz=timezone.utc).timestamp() * 1e6)
 
 
+def _parallelism(n: int | None) -> int:
+    # Unregistered readers (no session to ask) fall back to this
+    # host's cores — the parallelism of a local[*] session.
+    return n or os.cpu_count() or 1
+
+
 class DnsBatchReader(DataSourceReader):
     """S2 — batch scan; full-scan semantics plus zone pushdown."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None = None):
         self.opts = DnsSourceOptions.parse(options)
+        self.parallelism = _parallelism(parallelism)
         self._zone_filter: set[str] | None = None
 
     def pushFilters(self, filters: list[Filter]):
@@ -159,20 +236,13 @@ class DnsBatchReader(DataSourceReader):
             )
 
     def partitions(self):
-        ts = _now_us()
-        zones = self.opts.zones or make_transport(self.opts).zones()
+        transport = make_transport(self.opts)
+        zones = self.opts.zones or transport.zones()
         if self._zone_filter is not None:
             zones = [z for z in zones if z in self._zone_filter]
-        return [
-            DnsZonePartition(
-                zone=z,
-                from_serial=self.opts.serial,
-                to_serial=None,
-                axfr=self.opts.xfr == XFR_AXFR,
-                batch_ts_us=ts,
-            )
-            for z in zones
-        ]
+        axfr = self.opts.xfr == XFR_AXFR
+        transfers = [ZoneTransfer(z, self.opts.serial, None, axfr) for z in zones]
+        return _plan(transport, transfers, self.parallelism)
 
     def read(self, partition: DnsZonePartition):
         yield from _transfer_rows(self.opts, partition)
@@ -213,8 +283,9 @@ class ProgressLog:
 class DnsStreamReader(DataSourceStreamReader):
     """S7/T1–T5 — micro-batch source over the zone store."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None = None):
         self.opts = DnsSourceOptions.parse(options)
+        self.parallelism = _parallelism(parallelism)
         self.progress = ProgressLog(
             options.get("progress-dir")
             or os.path.join(self.opts.store, ".progress"),
@@ -303,23 +374,14 @@ class DnsStreamReader(DataSourceStreamReader):
         return out
 
     def partitions(self, start: dict, end: dict):
-        ts = _now_us()
-        parts = []
+        transfers = []
         for zone, hi in end.items():
             lo = int(start.get(zone, 0))  # zone added mid-stream ⇒ from 0
             if int(hi) > lo:
-                parts.append(
-                    DnsZonePartition(
-                        zone=zone,
-                        from_serial=lo,
-                        to_serial=int(hi),
-                        axfr=False,
-                        batch_ts_us=ts,
-                    )
-                )
+                transfers.append(ZoneTransfer(zone, lo, int(hi), False))
         # zones present in start but dropped from end are skipped —
         # warn-and-skip parity with DnsStreamingSource.java:86-89
-        return parts
+        return _plan(make_transport(self.opts), transfers, self.parallelism)
 
     def read(self, partition: DnsZonePartition):
         yield from _transfer_rows(self.opts, partition)
@@ -360,6 +422,9 @@ class DnsDataSource(DataSource):
     #: a worker process with no session — the snapshot rides on the
     #: cloudpickled class instead.
     _conf_defaults: dict = {}
+    #: the session's ``defaultParallelism``, baked in the same way: the
+    #: most read partitions a scan plans (None ⇒ this host's cores).
+    _default_parallelism: int | None = None
 
     def _resolved_options(self) -> dict:
         from spark_dns_spark.sources.options import apply_defaults  # noqa: PLC0415
@@ -368,8 +433,8 @@ class DnsDataSource(DataSource):
 
     def reader(self, schema: StructType) -> DnsBatchReader:
         self._check_schema(schema)
-        return DnsBatchReader(self._resolved_options())
+        return DnsBatchReader(self._resolved_options(), self._default_parallelism)
 
     def streamReader(self, schema: StructType) -> DnsStreamReader:
         self._check_schema(schema)
-        return DnsStreamReader(self._resolved_options())
+        return DnsStreamReader(self._resolved_options(), self._default_parallelism)

@@ -70,9 +70,15 @@ class ZoneTransport(ABC):
         """Run one zone transfer (see module contract)."""
 
     @abstractmethod
-    def check_connect(self, zone: str | None = None) -> None:
+    def check_connect(self) -> None:
         """Raise ``OSError`` for unreachable-server conditions that can
         be detected before/without a transfer (may be a no-op)."""
+
+    def size_hint(self, zone: str) -> int:
+        """Relative cost of transferring ``zone``, for packing zones
+        into read partitions.  Unknown by default: every zone weighs
+        the same."""
+        return 1
 
 
 class FileStoreTransport(ZoneTransport):
@@ -92,15 +98,18 @@ class FileStoreTransport(ZoneTransport):
     def transfer(
         self, zone: str, from_serial: int, to_serial: int | None, axfr: bool
     ) -> TransferResult:
-        if axfr and to_serial is None:
-            return self.store.axfr(zone)
-        # ixfr() serves from_serial==0 as a snapshot BOUNDED at
+        # the store serves from_serial==0 as a snapshot BOUNDED at
         # to_serial, so a streaming batch planned at [0, end] stays
         # pinned to its offsets even if the store advances first.
-        return self.store.ixfr(zone, from_serial, to_serial)
+        return self.store.transfer(
+            zone, from_serial, to_serial, axfr, self.timeout
+        )
 
-    def check_connect(self, zone: str | None = None) -> None:
-        self.store.check_connect(self.port, self.timeout, zone)
+    def check_connect(self) -> None:
+        self.store.check_connect(self.port)
+
+    def size_hint(self, zone: str) -> int:
+        return self.store.file_size(zone)
 
 
 def parse_xfr_stream(
@@ -281,7 +290,7 @@ class WireTransport(ZoneTransport):
             )
         return res
 
-    def check_connect(self, zone: str | None = None) -> None:
+    def check_connect(self) -> None:
         pass  # connection errors surface on the transfer itself
 
     # -- dnspython wire (import-gated; not exercised in this container) -

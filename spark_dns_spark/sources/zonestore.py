@@ -150,13 +150,11 @@ class ZoneStore:
         d["transfer_delay"] = float(seconds)
         self._write_atomic(zone, d)
 
-    def check_connect(
-        self, port: int, timeout: float, zone: str | None = None
-    ) -> None:
-        """Model the TCP-client failure modes the reference's tests
-        exercise (bad port → connection refused; slow transfer →
-        timeout; DnsSourceRelationProviderTest.java:86-147).  No real
-        sleep — the simulated RTT is compared against the timeout."""
+    def check_connect(self, port: int) -> None:
+        """Model the TCP-client connect failure the reference's tests
+        exercise (bad port → connection refused;
+        DnsSourceRelationProviderTest.java:86-147).  The slow-transfer
+        timeout is part of :meth:`transfer`, like a real client's."""
         try:
             with open(self._server_meta_path()) as f:
                 server_port = int(json.load(f)["port"])
@@ -167,16 +165,6 @@ class ZoneStore:
                 f"connection refused: port {port} "
                 f"(server listens on {server_port})"
             )
-        if zone is not None:
-            try:
-                delay = float(self._load(zone).get("transfer_delay", 0))
-            except ZoneNotFoundError:
-                return  # missing zone surfaces on the transfer itself
-            if delay and delay >= timeout:
-                raise OSError(
-                    f"transfer of {zone} timed out after {timeout}s "
-                    f"(simulated RTT {delay}s)"
-                )
 
     def zones(self) -> list[str]:
         if not os.path.isdir(self.root):
@@ -189,6 +177,9 @@ class ZoneStore:
         return out
 
     # -- read path (transfers) ---------------------------------------
+    # Each public read parses the zone file once and serves from the
+    # parsed document through the ``_*_doc`` helpers below.
+
     def serial(self, zone: str) -> int:
         """Cheap poll — the SOA query a real server answers.  This is
         what lets our streaming offsets be *end-of-data* offsets
@@ -196,16 +187,39 @@ class ZoneStore:
         (ZoneOffset.java:12-16)."""
         return int(self._load(zone)["serial"])
 
-    def axfr(self, zone: str) -> TransferResult:
+    def file_size(self, zone: str) -> int:
+        """Bytes of the zone's file (0 if not served): the size hint
+        the ``dns`` source packs its read partitions by."""
+        try:
+            return os.path.getsize(self._path(zone))
+        except FileNotFoundError:
+            return 0
+
+    def transfer(
+        self,
+        zone: str,
+        from_serial: int,
+        to_serial: int | None,
+        axfr: bool,
+        timeout: float,
+    ) -> TransferResult:
+        """One transfer as the simulated server answers it: AXFR when
+        ``axfr`` and unbounded, else :meth:`ixfr`.  A zone whose
+        simulated RTT (:meth:`set_transfer_delay`) reaches ``timeout``
+        raises ``OSError`` — no real sleep."""
         d = self._load(zone)
-        # The wire transfer carries every RR type (SOA, NS, A, ...);
-        # only A-records become rows — the reference's one
-        # protocol-level filter (P1, xfr/Xfr.java:76-81).
-        rrs = [("A", fqdn, ip) for fqdn, ip in d["records"]] + [
-            tuple(r) for r in d.get("non_a_records", [])
-        ]
-        rows = [(AXFR, name, value) for rtype, name, value in rrs if rtype == "A"]
-        return TransferResult(AXFR, int(d["serial"]), rows)
+        delay = float(d.get("transfer_delay", 0))
+        if delay and delay >= timeout:
+            raise OSError(
+                f"transfer of {zone} timed out after {timeout}s "
+                f"(simulated RTT {delay}s)"
+            )
+        if axfr and to_serial is None:
+            return _axfr_doc(d)
+        return _ixfr_doc(d, from_serial, to_serial)
+
+    def axfr(self, zone: str) -> TransferResult:
+        return _axfr_doc(self._load(zone))
 
     def snapshot_at(self, zone: str, at_serial: int) -> TransferResult:
         """Serial-bounded AXFR: the zone's state as of ``at_serial``,
@@ -216,30 +230,7 @@ class ZoneStore:
         and task execution (or on task retry) — the exactly-once
         guarantee the reference approximates with accumulators
         (DnsStreamingSource.java:53-67)."""
-        d = self._load(zone)
-        cur = int(d["serial"])
-        if at_serial >= cur:
-            return self.axfr(zone)
-        base_serial = int(d.get("base_serial", 0))
-        have = {int(h[0]) for h in d["history"]}
-        if at_serial < base_serial or not all(
-            s in have for s in range(base_serial + 1, at_serial + 1)
-        ):
-            raise ZoneNotFoundError(
-                f"history for {zone} does not reach back to serial {at_serial}"
-            )
-        recs = {tuple(r) for r in d.get("base_records", [])}
-        for h in sorted(d["history"], key=lambda h: int(h[0])):
-            if int(h[0]) > at_serial:
-                break
-            if int(h[0]) <= base_serial:  # already folded into the base
-                continue
-            if h[1] == IXFR_DELETE:
-                recs.discard((h[2], h[3]))
-            else:
-                recs.add((h[2], h[3]))
-        rows = [(AXFR, fqdn, ip) for fqdn, ip in sorted(recs)]
-        return TransferResult(AXFR, at_serial, rows)
+        return _snapshot_doc(self._load(zone), at_serial)
 
     def ixfr(
         self, zone: str, from_serial: int, to_serial: int | None = None
@@ -253,27 +244,7 @@ class ZoneStore:
         fallbacks honor ``to_serial`` via :meth:`snapshot_at`, so a
         bounded read never leaks rows beyond its planned end offset.
         """
-        d = self._load(zone)
-        cur = int(d["serial"])
-        hi = cur if to_serial is None else min(to_serial, cur)
-        if from_serial >= hi:
-            return TransferResult("IXFR", hi, [])
-        have = {int(h[0]) for h in d["history"]}
-        journal_complete = all(
-            s in have for s in range(from_serial + 1, hi + 1)
-        )
-        if (
-            from_serial == 0
-            or from_serial < int(d.get("base_serial", 0))
-            or not journal_complete  # journal truncated below from_serial
-        ):
-            return self.snapshot_at(zone, hi)
-        rows = [
-            (h[1], h[2], h[3])
-            for h in d["history"]
-            if from_serial < int(h[0]) <= hi
-        ]
-        return TransferResult("IXFR", hi, rows)
+        return _ixfr_doc(self._load(zone), from_serial, to_serial)
 
     # -- write path (DDNS update) ------------------------------------
     def apply_update(self, zone: str, changes: list[tuple[str, str, str]]) -> int:
@@ -307,3 +278,61 @@ class ZoneStore:
         (DnsSinkRelationProviderTest.java:182-197)."""
         d = self._load(zone)
         return sorted(ip for f, ip in d["records"] if f == fqdn)
+
+
+def _axfr_doc(d: dict) -> TransferResult:
+    # The wire transfer carries every RR type (SOA, NS, A, ...); only
+    # A-records become rows — the reference's one protocol-level
+    # filter (P1, xfr/Xfr.java:76-81).
+    rrs = [("A", fqdn, ip) for fqdn, ip in d["records"]] + [
+        tuple(r) for r in d.get("non_a_records", [])
+    ]
+    rows = [(AXFR, name, value) for rtype, name, value in rrs if rtype == "A"]
+    return TransferResult(AXFR, int(d["serial"]), rows)
+
+
+def _snapshot_doc(d: dict, at_serial: int) -> TransferResult:
+    cur = int(d["serial"])
+    if at_serial >= cur:
+        return _axfr_doc(d)
+    base_serial = int(d.get("base_serial", 0))
+    have = {int(h[0]) for h in d["history"]}
+    if at_serial < base_serial or not all(
+        s in have for s in range(base_serial + 1, at_serial + 1)
+    ):
+        raise ZoneNotFoundError(
+            f"history for {d['zone']} does not reach back to serial {at_serial}"
+        )
+    recs = {tuple(r) for r in d.get("base_records", [])}
+    for h in sorted(d["history"], key=lambda h: int(h[0])):
+        if int(h[0]) > at_serial:
+            break
+        if int(h[0]) <= base_serial:  # already folded into the base
+            continue
+        if h[1] == IXFR_DELETE:
+            recs.discard((h[2], h[3]))
+        else:
+            recs.add((h[2], h[3]))
+    rows = [(AXFR, fqdn, ip) for fqdn, ip in sorted(recs)]
+    return TransferResult(AXFR, at_serial, rows)
+
+
+def _ixfr_doc(d: dict, from_serial: int, to_serial: int | None) -> TransferResult:
+    cur = int(d["serial"])
+    hi = cur if to_serial is None else min(to_serial, cur)
+    if from_serial >= hi:
+        return TransferResult("IXFR", hi, [])
+    have = {int(h[0]) for h in d["history"]}
+    journal_complete = all(s in have for s in range(from_serial + 1, hi + 1))
+    if (
+        from_serial == 0
+        or from_serial < int(d.get("base_serial", 0))
+        or not journal_complete  # journal truncated below from_serial
+    ):
+        return _snapshot_doc(d, hi)
+    rows = [
+        (h[1], h[2], h[3])
+        for h in d["history"]
+        if from_serial < int(h[0]) <= hi
+    ]
+    return TransferResult("IXFR", hi, rows)

@@ -5,10 +5,20 @@ the in-process zone store instead of a Bind9 container (SURVEY.md §5).
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
+from pyspark.sql.datasource import EqualTo
 
 from spark_dns_spark.sources import register_all
-from spark_dns_spark.sources.zonestore import ZoneStore
+from spark_dns_spark.sources.dns_source import (
+    READ_SCHEMA,
+    DnsBatchReader,
+    DnsZonePartition,
+    ZoneTransfer,
+    pack_transfers,
+)
+from spark_dns_spark.sources.zonestore import ZoneNotFoundError, ZoneStore
 
 
 @pytest.fixture()
@@ -31,6 +41,21 @@ def store(tmp_path):
         serial=1,
     )
     return s
+
+
+def _zipf_store(root: str, n: int = 24) -> ZoneStore:
+    """``n`` zones, ``z00.test.`` the largest, sizes falling like 1/rank."""
+    s = ZoneStore(root)
+    for i in range(n):
+        z = f"z{i:02d}.test."
+        s.create_zone(
+            z, records=[(f"h{j}.{z}", f"10.{i}.0.{j}") for j in range(96 // (i + 1))]
+        )
+    return s
+
+
+def _zones(parts) -> list[list[str]]:
+    return [[t.zone for t in p.transfers] for p in parts]
 
 
 def _read(spark, store, **opts):
@@ -276,3 +301,103 @@ def test_persistent_table_via_conf_fallback(spark, store):
             spark.conf.unset(k)
         register_all(spark)  # re-register with a clean (empty) snapshot
         spark.sql("DROP TABLE IF EXISTS dns_persistent_probe")
+
+
+# -- zones packed into read partitions ---------------------------------
+
+
+def test_pack_transfers_is_largest_first_into_least_loaded():
+    t = {z: ZoneTransfer(z, 0, None, True) for z in "abcdef"}
+    sizes = dict(a=10, b=7, c=5, d=4, e=3, f=1)
+    lpt = pack_transfers(list(t.values()), sizes, 2)
+    assert [[x.zone for x in b] for b in lpt] == [["a", "d", "f"], ["b", "c", "e"]]
+    # equal sizes (the wire transport knows none): dealt in plan order
+    eq = pack_transfers(list(t.values()), dict.fromkeys(t, 1), 4)
+    assert [[x.zone for x in b] for b in eq] == [["a", "e"], ["b", "f"], ["c"], ["d"]]
+    assert pack_transfers([], {}, 4) == []
+
+
+def test_batch_plan_packs_each_zone_once_into_at_most_parallelism(tmp_path):
+    s = _zipf_store(str(tmp_path / "zones"))
+    opts = {"store": s.root, "xfr": "axfr"}
+    reader = DnsBatchReader(opts, parallelism=4)
+    parts = reader.partitions()
+    assert len(parts) == 4
+    assert sorted(z for b in _zones(parts) for z in b) == sorted(s.zones())
+    # each bin is led by one of the four largest zones
+    assert sorted(p.zone for p in parts) == [f"z{i:02d}.test." for i in range(4)]
+    # the same store always packs the same way
+    assert _zones(DnsBatchReader(opts, parallelism=4).partitions()) == _zones(parts)
+    # fewer zones than cores: one zone per partition
+    assert len(DnsBatchReader(opts, parallelism=64).partitions()) == 24
+    rows = [r for p in parts for r in reader.read(p)]
+    assert len(rows) == sum(len(s.axfr(z).rows) for z in s.zones())
+    assert len({r[4] for r in rows}) == 1  # one planning-time timestamp
+
+
+def test_zone_pushdown_prunes_before_packing(tmp_path):
+    s = _zipf_store(str(tmp_path / "zones"))
+    reader = DnsBatchReader({"store": s.root, "xfr": "axfr"}, parallelism=4)
+    assert list(reader.pushFilters([EqualTo(("zone",), "z05.test.")])) == []
+    assert _zones(reader.partitions()) == [["z05.test."]]
+
+
+def test_read_plans_one_partition_per_core(spark, tmp_path):
+    s = _zipf_store(str(tmp_path / "zones"))
+    register_all(spark)
+    df = spark.read.format("dns").option("store", s.root).option("xfr", "axfr").load()
+    assert df.rdd.getNumPartitions() == min(24, spark.sparkContext.defaultParallelism)
+    assert df.count() == sum(len(s.axfr(z).rows) for z in s.zones())
+
+
+@pytest.mark.parametrize("fault", ["fail-zones", "missing", "timeout"])
+def test_failing_zone_does_not_empty_its_partition(store, fault):
+    """ignore-failures suppresses per zone: the healthy zone packed
+    after a failing one in the same partition still delivers."""
+    bad = "nonexistent.zone." if fault == "missing" else "example.acme."
+    opts = {"store": store.root, "xfr": "axfr", "zones": f"{bad},another.zone."}
+    if fault == "fail-zones":
+        opts["fail-zones"] = bad
+    if fault == "timeout":
+        store.set_transfer_delay(bad, 30.0)
+    assert len(DnsBatchReader(opts, parallelism=1).partitions()) == 1
+    part = DnsZonePartition(
+        transfers=(
+            ZoneTransfer(bad, 0, None, True),
+            ZoneTransfer("another.zone.", 0, None, True),
+        ),
+        batch_ts_us=0,
+    )
+    lenient = DnsBatchReader({**opts, "ignore-failures": "true"}, parallelism=1)
+    rows = list(lenient.read(part))
+    assert len(rows) == 5 and {r[5] for r in rows} == {"another.zone."}
+    with pytest.raises((OSError, ZoneNotFoundError)):
+        list(DnsBatchReader(opts, parallelism=1).read(part))
+
+
+def test_register_all_bakes_in_parallelism_and_conf(tmp_path):
+    """Readers are built in a planning worker with no session, so
+    register_all carries the session's defaultParallelism (next to the
+    spark.dns.* snapshot) on the registered class; re-registering
+    refreshes both, and explicit options still win over the snapshot."""
+    s = _zipf_store(str(tmp_path / "zones"))
+    conf = {"spark.dns.store": s.root, "spark.dns.zones": "z01.test."}
+    registered = []
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda k, d=None: conf.get(k, d),
+                             set=conf.__setitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=3),
+        dataSource=SimpleNamespace(register=registered.append),
+    )
+
+    def dns_reader(options):
+        cls = next(c for c in registered[::-1] if c.name() == "dns")
+        return cls(options).reader(READ_SCHEMA)
+
+    register_all(session)
+    assert dns_reader({}).parallelism == 3
+    assert _zones(dns_reader({}).partitions()) == [["z01.test."]]
+    session.sparkContext.defaultParallelism = 2
+    register_all(session)
+    assert len(dns_reader({"zones": "z01.test.,z02.test.,z03.test."}).partitions()) == 2
+    assert dns_reader({"zones": "z04.test."}).opts.zones == ["z04.test."]

@@ -316,3 +316,27 @@ def test_admission_clock_crash_recovery(spark, store, tmp_path):
     for _ in range(5):
         out = r3.latestOffset()
     assert out == {"example.acme.": 5}
+
+
+def test_stream_partitions_skip_unchanged_zones_and_pack_the_rest(tmp_path):
+    """A micro-batch plans only zones whose serial moved, each bounded
+    at its planned offsets, packed into at most ``parallelism`` bins."""
+    from spark_dns_spark.sources.dns_source import DnsStreamReader
+
+    s = ZoneStore(str(tmp_path / "zones"))
+    for i in range(6):
+        s.create_zone(f"z{i}.test.", records=[(f"h.z{i}.test.", f"10.0.0.{i}")])
+    reader = DnsStreamReader({"store": s.root}, parallelism=2)
+    start = {f"z{i}.test.": 1 for i in range(6)}
+    end = {**start, "z1.test.": 3, "z2.test.": 2, "z4.test.": 5, "new.test.": 1}
+    parts = reader.partitions(start, end)
+    assert len(parts) == 2
+    planned = sorted(t for p in parts for t in p.transfers)
+    assert [(t.zone, t.from_serial, t.to_serial) for t in planned] == [
+        ("new.test.", 0, 1),  # zone added mid-stream ⇒ from 0
+        ("z1.test.", 1, 3),
+        ("z2.test.", 1, 2),
+        ("z4.test.", 1, 5),
+    ]
+    assert not any(t.axfr for t in planned)
+    assert reader.partitions(start, start) == []

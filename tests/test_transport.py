@@ -11,6 +11,8 @@ parsed rows == FileStoreTransport's rows, transfer for transfer.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from spark_dns_spark.sources.transport import (
@@ -93,6 +95,38 @@ def _transports(store):
         serial_wire=lambda z: store.serial(z),
     )
     return file_t, wire_t
+
+
+@pytest.mark.parametrize(
+    "from_serial,to_serial,axfr",
+    [
+        (0, None, True),  # AXFR
+        (0, None, False),  # serial-0 IXFR ⇒ snapshot
+        (3, None, False),  # delta
+        (3, 4, False),  # bounded delta
+        (1, None, False),  # below the journal base ⇒ snapshot fallback
+        (0, 4, False),  # bounded snapshot (replayed history)
+    ],
+)
+def test_file_store_transfer_parses_the_zone_once(
+    store, monkeypatch, from_serial, to_serial, axfr
+):
+    loads = []
+    load = ZoneStore._load
+    monkeypatch.setattr(
+        ZoneStore, "_load", lambda self, z: loads.append(z) or load(self, z)
+    )
+    t = FileStoreTransport(store.root)
+    t.check_connect()
+    t.transfer(ZONE, from_serial, to_serial, axfr)
+    assert loads == [ZONE]
+
+
+def test_size_hints(store):
+    file_t, wire_t = _transports(store)
+    assert file_t.size_hint(ZONE) == os.path.getsize(store._path(ZONE))
+    assert file_t.size_hint("unserved.zone.") == 0
+    assert wire_t.size_hint(ZONE) == 1  # a server reports no sizes
 
 
 # -- transport equivalence: same store state, same rows ---------------
