@@ -265,7 +265,7 @@ def main() -> None:
     # per-query map (the r15 failure mode).  The final stdout line
     # below stays a compact summary (<1.5 KB) the driver can always
     # parse.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "default"
+    cpus = spark.sparkContext.defaultParallelism
     detail = {
         "metric": "headline_queries_total",
         "value": round(sum(timings.values()), 3),

@@ -130,781 +130,78 @@ class Query:
     sql: str | None  # DuckDB oracle; None ⇒ rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    #: Catalog-order tier (lower = earlier).  The driver's correctness
-    #: window covers roughly the first 50 entries, so tiers keep the
-    #: reference-core + newest queries checked while pushing redundant
-    #: shapes (extra TPC-H, duplicate formulations green in past rounds)
-    #: past the window.  Within a tier, registration order rules.
-    #: Values: 5 = window head; TIER_WINDOW_TAIL (5.5) = inside the
-    #: window but deliberately LAST — the r11 gate died mid-window in
-    #: the ANN tier and forfeited all the cheap evidence ordered after
-    #: it, so the expensive index-backed entries now sit at the tail
-    #: where a death forfeits the least (VERDICT-r11 item 1b); 6 = out
-    #: of the window (full-catalog gate + bench only).
-    tier: float = 5
 
 
 _REGISTRY: dict[str, Query] = {}
 
-#: Round-4 window rotation (VERDICT r3 item 3).  The driver's
-#: correctness window covers roughly the first 50 catalog entries;
-#: rotation policy is per-round, so it lives HERE as one override map
-#: instead of being scattered across @register sites:
-#:
-#: - tier 5 (into the window): every query NEW or semantically CHANGED
-#:   this round, plus 20 of the 31 queries whose last green driver row
-#:   was r1/r2 — connector core retained, §2-operator diversity first
-#:   (changelog A1-A4/O1, F3-F6 functions, windows, sets, TPC-H core).
-#: - tier 6 (out of the window): queries green in BOTH r2 and r3 and
-#:   untouched this round, plus r3-green map-only singles — all still
-#:   regression-checked every round by the FULL-catalog oracle artifact
-#:   (ORACLE_FULL_r{N}.json, tools/check_oracle.py --json), which is
-#:   the ADVICE-r3 answer to rotation blind spots: the driver window
-#:   rotates, the local gate never does.
-_ROTATION_R4: dict[str, int] = {
-    # rotate IN — stale-green §2 operators
-    "changelog_latest_wins": 5,
-    "group_by_zone": 5,
-    "zone_serial_max": 5,
-    "exactly_once_check": 5,
-    "chronological_topk": 5,
-    "validate_updates": 5,
-    "distinct_zones": 5,
-    "fqdn_normalize": 5,
-    "zone_from_fqdn": 5,
-    "json_extract": 5,
-    "json_roundtrip": 5,
-    "changelog_max_by_variant": 5,
-    "dns_typosquat_levenshtein": 5,
-    "sessionize_window_native": 5,
-    "tumbling_window_counts": 5,
-    "tpch_q1_pricing_summary": 5,
-    "revenue_by_nation": 5,
-    "top_customers_per_nation": 5,
-    "lineitem_running_window": 5,
-    "segment_union_distinct": 5,
-    # rotate OUT — twice-green (r2+r3) and untouched this round
-    "changelog_snapshot": 6,
-    "dedup_exact_documents": 6,
-    "dedup_minhash_signatures": 6,
-    "dedup_ngram_jaccard": 6,
-    "dedup_simhash": 6,
-    "multimodal_binary_dedup": 6,
-    "multimodal_join": 6,
-    "sessionize_events": 6,
-    "sessionize_stream_stateful": 6,
-    "text_fingerprint": 6,
-    "text_language_id": 6,
-    "text_quality_by_source": 6,
-    "text_quality_score": 6,
-    "text_token_counts": 6,
-    # rotate OUT — r3-green map-only/sketch singles, untouched
-    "format_json_roundtrip": 6,
-    "format_csv_roundtrip": 6,
-    "skew_salted_count": 6,
-    "skew_salted_join": 6,
-    "sketch_kmv_distinct": 6,
-    "sample_stratified_hash": 6,
-    "embedding_quantize_int8": 6,
-}
-
-#: Round-6 rotation, layered over the r4 map (later map wins).  Policy
-#: unchanged: everything semantically CHANGED this round enters the
-#: window; twice-green untouched shapes leave to make room.  Changed in
-#: r6 and previously rotated out: the two sessionizers (NTZ rebuild +
-#: stream-schema derivation) and the two signature queries whose
-#: expression construction was rewritten (simhash_agg / minhash expr
-#: fast path).  Rotated out to compensate: four r5-green untouched
-#: queries, each leaving a same-family representative in the window
-#: (typosquat_blocked, sessionize_window_native, json_extract,
-#: segment_intersect_except).
-_ROTATION_R6: dict[str, int] = {
-    # rotate IN — changed this round
-    "sessionize_events": 5,
-    "sessionize_stream_stateful": 5,
-    "dedup_simhash": 5,
-    "dedup_minhash_signatures": 5,
-    # rotate OUT — r5-green, untouched in r6
-    "dns_typosquat_levenshtein": 6,
-    "tumbling_window_counts": 6,
-    "json_roundtrip": 6,
-    "segment_union_distinct": 6,
-    # rotate IN — NEW this round (packing + kmeans tiers); three green
-    # untouched shapes rotate out to hold the window at ~50, each with
-    # a same-family representative remaining (windows: hypertable_rollup
-    # + sessionize_window_native; text map-passes: text_quality_score;
-    # broadcast star joins: revenue_by_nation)
-    "pack_tokens_stream": 5,
-    "pack_greedy_bins": 5,
-    "kmeans_lloyd_cells": 5,
-    "lineitem_running_window": 6,
-    "text_token_counts": 6,
-    "top_customers_per_nation": 6,
-    # rotate IN — NEW in the r6 continuation: the TPC-H subquery family
-    # (correlated EXISTS, outer-join distribution, HAVING-subquery,
-    # scalar-agg + anti-join, scalar-max row selection) registers at
-    # q_relational's tail, so eight green untouched shapes rotate out
-    # to hold tier 5 at exactly 50.  Family representatives remaining
-    # in-window: zone_from_fqdn (F5/F6 scalar fns), group_by_zone +
-    # validate_updates (changelog A1/P4), changelog_max_by_variant
-    # (argmax/top-k family), text_pii_redact (text map-passes),
-    # tfidf_top_terms + events_user_zscore (ML-prep), domain_mix_rebalance
-    # (curation).  All eight stay under the full-catalog oracle gate.
-    "fqdn_normalize": 6,
-    "distinct_zones": 6,
-    "zone_serial_max": 6,
-    "chronological_topk": 6,
-    "json_extract": 6,
-    "text_repetition_filter": 6,
-    "vocab_top_bigrams": 6,
-    "quality_quantile_cutoff": 6,
-    # rotate IN — NEW: multimodal_frame_sample (tier-5 default); one
-    # more green untouched curation shape leaves to hold the window at
-    # 50 (text_pii_redact + contamination_ngram_overlap +
-    # dedup_cluster_representatives remain as curation family reps)
-    "domain_mix_rebalance": 6,
-    # rotate IN — NEW: similarity_ivf_recall (tier-5 default); the
-    # cluster tier keeps dedup_cluster_assign + pointer_doubling as
-    # its in-window representatives
-    "dedup_cluster_representatives": 6,
-    # rotate IN — NEW: graph_pagerank_transitions (tier-5 default);
-    # the ML-prep tier keeps tfidf_top_terms + events_user_zscore as
-    # its in-window representatives
-    "dedup_incremental_batch": 6,
-    # rotate IN — NEW: layout_zorder_events (tier-5 default); the
-    # curation tier keeps contamination_ngram_overlap as its
-    # in-window representative
-    "text_pii_redact": 6,
-    # rotate IN — NEW: sessions_peak_concurrency + ivm_join_delta
-    # (tier-5 defaults); multimodal_frame_sample now represents the
-    # Arrow mapInPandas family and events_user_zscore (changed r6)
-    # the ML-prep tier
-    "multimodal_decode_features": 6,
-    "tfidf_top_terms": 6,
-    # rotate IN — NEW: events_rolling_features (tier-5 default); the
-    # iterative-cluster family keeps dedup_cluster_pointer_doubling
-    # (the 100x-scale variant) plus kmeans + pagerank in-window
-    "dedup_cluster_assign": 6,
-    # rotate IN — NEW: orders_retention_cohorts (tier-5 default);
-    # both typosquat analytics now sit under the full-catalog gate
-    # (r5-green, unchanged since r3)
-    "dns_typosquat_blocked": 6,
-    # rotate IN — NEW continuation-3 tier (events_gap_fill_ffill,
-    # events_ohlc_bars, index_inverted_postings, heavy_hitters_events,
-    # events_mad_outliers; tier-5 defaults).  Five r5-green untouched
-    # shapes leave, family representatives remaining in-window:
-    # changelog_incremental_merge + changelog_max_by_variant +
-    # validate_updates + exactly_once_check (changelog A1-A4),
-    # tpch_q4/q13/q18/q22/q15 (TPC-H joins incl. broadcast star
-    # shapes), sessionize_events + sessions_peak_concurrency +
-    # sessionize_stream_stateful (sessionization).
-    "changelog_latest_wins": 6,
-    "group_by_zone": 6,
-    "tpch_q1_pricing_summary": 6,
-    "revenue_by_nation": 6,
-    "sessionize_window_native": 6,
-    # rotate IN — NEW continuation-4 tier (dedup_sorted_neighborhood,
-    # validate_quality_constraints, changelog_scd2_intervals,
-    # stream_dedup_replay; tier-5 defaults).  Four r5-green untouched
-    # shapes leave: exactly_once_check (changelog invariants remain
-    # via validate_updates + changelog_max_by_variant),
-    # similarity_lsh_recall (ivf_recall is the in-window recall-gate
-    # twin), contamination_ngram_overlap (pipeline_curate_corpus
-    # carries the curation family), orders_pivot_status (the whole
-    # pivot/cube/grouping-sets family now sits under the full-catalog
-    # gate — all green since r2).
-    "exactly_once_check": 6,
-    "similarity_lsh_recall": 6,
-    "contamination_ngram_overlap": 6,
-    "orders_pivot_status": 6,
-    # rotate IN — NEW: vocab_bpe_merges (tier-5 default); the
-    # incremental-maintenance family keeps ivm_join_delta (new r6) as
-    # its in-window representative
-    "changelog_incremental_merge": 6,
-    # rotate IN — NEW: cooccurrence_glove_window +
-    # events_funnel_conversion (tier-5 defaults).  Out: hypertable_rollup
-    # (window/rollup family represented by events_rolling_features,
-    # events_ohlc_bars, events_gap_fill_ffill) and dedup_embedding_cosine
-    # (embedding-similarity family keeps topk_bruteforce/lsh/ivf +
-    # similarity_ivf_recall in-window); both r4/r5-green, untouched r6.
-    "hypertable_rollup": 6,
-    "dedup_embedding_cosine": 6,
-    # rotate IN — NEW: basket_copurchase_lift + events_value_histogram
-    # (tier-5 defaults).  Out: dedup_minhash_lsh (minhash family keeps
-    # dedup_minhash_signatures in-window) and similarity_topk_ivf
-    # (similarity_ivf_recall composes the SAME _ivf_topk plan and stays
-    # in-window); both r5-green, untouched r6.
-    "dedup_minhash_lsh": 6,
-    "similarity_topk_ivf": 6,
-    # rotate IN — NEW: stream_attribution_join (tier-5 default); out:
-    # zone_from_fqdn (micro map-only F5 scalar query, green since r4 —
-    # the connector queries in-window exercise the same function paths,
-    # and the full-catalog gate still covers it every round).
-    "zone_from_fqdn": 6,
-    # rotate IN — NEW: ivm_agg_delta + events_equidepth_quartiles
-    # (tier-5 defaults).  Out: validate_updates (P4 — the richer
-    # validate_quality_constraints suite now represents validation
-    # in-window; P4 stays pytest-pinned + under the full gate) and
-    # similarity_topk_bruteforce (correctness-green since r1; the
-    # bench measures it regardless of tier, so the perf watch from
-    # VERDICT r5 item 7 is unaffected).
-    "validate_updates": 6,
-    "similarity_topk_bruteforce": 6,
-    # rotate IN — NEW: multimodal_resize_nn (tier-5 default); out:
-    # dedup_cluster_pointer_doubling (r4-new, r5-green, untouched r6 —
-    # the iterative family keeps kmeans + pagerank in-window and the
-    # full-catalog gate still covers both CC variants every round).
-    "dedup_cluster_pointer_doubling": 6,
-    # rotate IN — NEW: batching_length_grouped (tier-5 default); out:
-    # pack_greedy_bins (its twin pack_tokens_stream stays in-window as
-    # the packing-tier representative; both r6-new and green at all
-    # three SFs under the full gate).
-    "pack_greedy_bins": 6,
-    # rotate IN — NEW: events_quantile_normalize (tier-5 default);
-    # out: similarity_topk_lsh (r5-green, untouched r6, still timed by
-    # the bench every round; similarity_ivf_recall remains the
-    # in-window ANN representative).
-    "similarity_topk_lsh": 6,
-    # rotate IN — NEW: dedup_snm_span_clusters (tier-5 default); out:
-    # pipeline_curate_corpus (r5-green, untouched r6; every component
-    # pass it composes is individually under the full-catalog gate).
-    "pipeline_curate_corpus": 6,
-    # rotate IN — NEW: snapshot_diff_orders (tier-5 default); out:
-    # text_chunk_windows (green since r3; the UDTF surface stays
-    # pytest-pinned in tests/test_chunking.py and under the full gate).
-    "text_chunk_windows": 6,
-    # rotate IN — NEW: dedup_cluster_star_contraction (tier-5
-    # default); out: dns_read_zone_pushdown (green every round since
-    # r1; pushdown stays pinned by test_plan_shapes +
-    # tests/test_dns_source.py, and axfr/ixfr/stream remain the
-    # in-window connector representatives).
-    "dns_read_zone_pushdown": 6,
-    # rotate IN — NEW: events_cusum_drift (tier-5 default); out:
-    # dns_stream_sink_roundtrip (r5-green; sessionize_stream_stateful,
-    # stream_dedup_replay and stream_attribution_join keep streaming
-    # execution in-window, and the connector round-trip stays pinned
-    # by tests/test_dns_streaming.py + tests/test_dns_sink.py).
-    "dns_stream_sink_roundtrip": 6,
-    # rotate IN — NEW: lineitem_unpivot_metrics (tier-5 default); out:
-    # format_orc_roundtrip (mechanical variant of the r4-judged
-    # json/csv roundtrips; stays under the full-catalog gate).
-    "format_orc_roundtrip": 6,
-}
-
-#: Round-7 rotation, layered over r4+r6 (later map wins).  Policy
-#: unchanged: new/changed queries enter the window (the two r7-new
-#: queries — vocab_bpe_apply, dedup_exact_substring — enter at the
-#: tier-5 default); green untouched shapes with an in-window family
-#: representative leave to hold tier 5 at 50.
-_ROTATION_R7: dict[str, int] = {
-    # rotate IN — CHANGED r7: the IVF index was rebuilt on k-means
-    # coarse cells + multi-assignment (recall 0.56 -> 0.84+), so the
-    # plan itself re-enters the window next to its recall gate
-    # (similarity_ivf_recall, already in-window, composes the same
-    # _ivf_topk).
-    "similarity_topk_ivf": 5,
-    # rotate OUT — green, untouched r7, family reps remain in-window:
-    # tpch_q15 (scalar-max row selection; q4/q13/q18/q22 carry the
-    # TPC-H subquery family), events_value_histogram (equi-width
-    # binning; with events_equidepth_quartiles ALSO rotating out below,
-    # the distribution family is represented in-window by cusum /
-    # user_zscore / quantile_normalize, and both histogram shapes stay
-    # under the full-catalog gate + bench every round), and
-    # multimodal_frame_sample (multimodal_resize_nn keeps the Arrow
-    # mapInPandas quartet in-window).  All stay under the full-catalog
-    # oracle gate every round.
-    "tpch_q15_top_supplier": 6,
-    "events_value_histogram": 6,
-    "multimodal_frame_sample": 6,
-    # rotate IN — NEW: dedup_substring_clean (tier-5 default; the
-    # apply side of dedup_exact_substring, which stays in-window as
-    # the family's accounting twin); out: lineitem_unpivot_metrics
-    # (r6-win green mechanical reshape; the pivot/unpivot family sits
-    # under the full-catalog gate like the pivot/cube shapes before it).
-    "lineitem_unpivot_metrics": 6,
-    # rotate IN — NEW: vocab_bpe_fertility, mlprep_leakage_free_split,
-    # mlprep_split_leakage_audit (tier-5 defaults).  Out, all r6-win
-    # green with in-window family reps: dedup_snm_span_clusters (the
-    # bench times it every round regardless; dedup_sorted_neighborhood
-    # + sessions_peak_concurrency carry the SNM/sweep-line family),
-    # batching_length_grouped (pack_tokens_stream carries packing),
-    # ivm_join_delta (ivm_agg_delta stays in-window and benched).
-    "dedup_snm_span_clusters": 6,
-    "batching_length_grouped": 6,
-    "ivm_join_delta": 6,
-    # rotate IN — NEW: graph_triangle_count + dns_ip_cidr_attribution
-    # (tier-5 defaults).  Out, both r6-win green with reps remaining:
-    # layout_zorder_events (map-only codegen expression, pinned by
-    # tests/test_layout.py's footer-pruning proof) and
-    # events_rolling_features (the events window family keeps
-    # gap_fill/ohlc/cusum/user_zscore/equidepth in-window).
-    "layout_zorder_events": 6,
-    "events_rolling_features": 6,
-    # rotate IN — NEW: linkage_field_scores + sample_weighted_priority
-    # (tier-5 defaults).  Out, both green with reps remaining:
-    # events_mad_outliers (robust-stats family keeps equidepth/cusum/
-    # user_zscore in-window) and events_ohlc_bars (time-series family
-    # keeps gap_fill/cusum/quantile_normalize in-window; ohlc stays in
-    # the bench and under the full gate).
-    "events_mad_outliers": 6,
-    "events_ohlc_bars": 6,
-    # rotate IN — NEW: mix_token_budget_apportion (tier-5 default);
-    # out: events_equidepth_quartiles (benched every round; the
-    # distribution-stats family keeps cusum/user_zscore/
-    # quantile_normalize in-window).
-    "events_equidepth_quartiles": 6,
-    # rotate IN — NEW: graph_clustering_coefficient (tier-5 default);
-    # out: snapshot_diff_orders (r6-win green; the validation family
-    # keeps validate_quality_constraints in-window).
-    "snapshot_diff_orders": 6,
-}
-
-#: Round-8 rotation, layered over r4+r6+r7 (later map wins).  The two
-#: NEW r8 queries (dedup_minhash_incremental, similarity_ivf_build)
-#: enter via the tier-5 default; similarity_topk_ivf (now serving from
-#: the stored index) and index_inverted_postings (one-exchange rebuild)
-#: are already in-window from r7/r5.
-_ROTATION_R8: dict[str, int] = {
-    # rotate IN — the dns_update writer was refactored this round (ttl
-    # plumb + wire-transport branch share the store path's dedup/apply
-    # code), so the sink roundtrip re-enters the window.
-    "dns_stream_sink_roundtrip": 5,
-    # rotate OUT — r7-green, untouched r8, holding the window at 50;
-    # family reps remaining in-window: the events window family keeps
-    # gap_fill/cusum/user_zscore/quantile_normalize (funnel out), the
-    # join family keeps the four TPC-H subquery shapes + asof/range
-    # (basket lift out), and cooccurrence's windowed-pairs shape is
-    # structurally covered by cooccur's own full-gate row plus the
-    # in-window glove-style aggregations (sessions/rolling).  All three
-    # stay under the full-catalog oracle gate every round.
-    "cooccurrence_glove_window": 6,
-    "events_funnel_conversion": 6,
-    "basket_copurchase_lift": 6,
-    # rotate IN — NEW r8 continuation: index_bm25_topk (integer-exact
-    # BM25 retrieval) and similarity_pq_codes (PQ codebooks) enter at
-    # the tier-5 default.  Out, both green in r6+r7 and untouched r8,
-    # each with an in-window family representative: events_gap_fill_
-    # ffill (the events window family keeps cusum/user_zscore/
-    # quantile_normalize in-window) and orders_retention_cohorts (the
-    # relational-window family keeps scd2_intervals + the TPC-H
-    # subquery shapes in-window).  Both stay under the full-catalog
-    # oracle gate and the bench every round.
-    "events_gap_fill_ffill": 6,
-    "orders_retention_cohorts": 6,
-    # rotate IN — NEW r8 continuation 2: similarity_pq_adc_recall (the
-    # two-stage PQ-ADC serve + recall gate, tier-5 default).  Out:
-    # graph_triangle_count (r7-new, r7-green; graph_clustering_
-    # coefficient stays in-window and composes the same LSH pair
-    # graph, and the triangle count remains under the full-catalog
-    # gate + bench every round).
-    "graph_triangle_count": 6,
-    # rotate IN — NEW r8 continuation 3: quality_lm_bigram_score
-    # (bigram-LM perplexity-filter scoring, tier-5 default).  Out:
-    # sample_weighted_priority (r7-new, r7-green; the sampling family
-    # keeps mix_token_budget_apportion in-window, and the priority
-    # sampler stays under the full-catalog gate).
-    "sample_weighted_priority": 6,
-}
-
-
-#: Round-9 rotation, layered over r4+r6+r7+r8 (later map wins).  The
-#: r9-new/changed queries enter via the tier-5 default or were already
-#: in-window: similarity_topk_ivfpq (NEW — the composed IVF-PQ serve),
-#: similarity_pq_codes + similarity_pq_adc_recall (REBUILT — slim fused
-#: oracle + train-once index, the r8 red-row fix), similarity_ivf_build
-#: + similarity_topk_ivf + dedup_minhash_incremental (index caches now
-#: lock + mtime keyed).  Green untouched shapes leave to hold tier 5 at
-#: ~50, each with an in-window family representative.
-_ROTATION_R9: dict[str, int] = {
-    # rotate OUT — r7-new, green r7+r8, untouched r9: the BPE family
-    # keeps vocab_bpe_merges in-window; apply/fertility stay under the
-    # full-catalog gate + bench every round.
-    "vocab_bpe_fertility": 6,
-    # rotate OUT (making room for the r9-continuation upsert family —
-    # similarity_pq_upsert/_stream/_drift + index_postings_upsert, all
-    # NEW r9): the substring-dedup family keeps dedup_exact_substring
-    # in-window (both halves r8-green; the clean variant's span
-    # arithmetic stays pytest-pinned and under the full-catalog gate),
-    # and the correlated-subquery TPC-H family keeps q4 + q18 + q22
-    # in-window (q13 green r8, untouched).  These two leaving pull
-    # stream_dedup_replay (exactly-once replay) and vocab_bpe_merges
-    # (the BPE family rep) back inside the ~50 boundary.
-    "dedup_substring_clean": 6,
-    "tpch_q13_order_distribution": 6,
-    # rotate OUT (making room for dedup_minhash_stream, NEW r9): the
-    # minhash family keeps lsh + incremental + stream in-window;
-    # the signatures-only map query is r8-green and its values are a
-    # strict prefix of every other family member's lineage.
-    "dedup_minhash_signatures": 6,
-    # rotate OUT — r7-new, green r7+r8, untouched r9: the leakage
-    # family keeps mlprep_leakage_free_split in-window; the audit's
-    # cross-split-pairs==0 invariant stays pytest-pinned and under the
-    # full-catalog gate.
-    "mlprep_split_leakage_audit": 6,
-    # rotate OUT (making room for index_bm25_dense, NEW r9): the
-    # distribution/normalization family keeps events_user_zscore +
-    # events_cusum_drift in-window; quantile_normalize stays benched
-    # and under the full-catalog gate.
-    "events_quantile_normalize": 6,
-    # rotate OUT (making room for similarity_ivf_upsert, NEW r9): the
-    # sessionization family keeps sessionize_events +
-    # sessionize_stream_stateful in-window; peak-concurrency's
-    # sweep-line shape stays pytest-pinned (test_sweepline_spans) and
-    # under the full-catalog gate.
-    "sessions_peak_concurrency": 6,
-    # rotate OUT (making room for similarity_ivfpq_recall, NEW r9):
-    # the streaming family keeps sessionize_stream_stateful +
-    # stream_dedup_replay in-window; the attribution join stays
-    # pytest-pinned (test_streaming tests) and under the full-catalog
-    # gate.
-    "stream_attribution_join": 6,
-    # --- r9 continuation 2: the TPC-H breadth pack II (q5/q7/q8/q10/
-    # q14/q17/q19, NEW — integer-e4 revenue convention) + sketch_
-    # countmin_freq + curation_boilerplate_fraction enter via the
-    # tier-5 default (9 new entries).  Eleven multi-round-green
-    # untouched shapes leave, each with an in-window family
-    # representative; ALL stay under the full-catalog oracle gate +
-    # bench every round.
-    "dedup_simhash": 6,  # rep: minhash lsh/incremental/stream + SNM
-    "linkage_field_scores": 6,  # green r7-r9; pytest-pinned scoring
-    "events_user_zscore": 6,  # rep: events_cusum_drift
-    "sessionize_events": 6,  # rep: sessionize_stream_stateful
-    "similarity_ivf_build": 6,  # rep: ivf_upsert + ivf_recall serve the
-    "similarity_topk_ivf": 6,  # ...same persisted index; byte-identity
-    #                            pytest-pinned (test_ivf_index.py)
-    "tpch_q18_large_orders": 6,  # rep: q4 EXISTS stays; NEW q17 enters
-    "tpch_q22_idle_rich_customers": 6,  # ...the correlated family
-    "stream_dedup_replay": 6,  # rep: dedup_minhash_stream +
-    #                            similarity_pq_upsert_stream
-    "vocab_bpe_apply": 6,  # rep: vocab_bpe_merges
-    "mix_token_budget_apportion": 6,  # rep: quality_lm_bigram_score +
-    #                            NEW curation_boilerplate_fraction
-    # rotate OUT (making room for dedup_url_canonical, NEW — the
-    # crawl-pipeline URL-canonicalization dedup): the SNM family keeps
-    # dedup_snm_span_clusters benched + pytest-pinned
-    # (test_sorted_neighborhood), and sorted_neighborhood is green
-    # r7-r9 untouched.
-    "dedup_sorted_neighborhood": 6,
-    # rotate OUT (making room for contamination_bloom_filter, NEW —
-    # the constant-state decontamination sketch): the graph family
-    # keeps graph_pagerank_transitions in-window; clustering
-    # coefficient + triangles are green r7-r9 untouched, benched, and
-    # share the LSH pair-graph lineage pytest pins.
-    "graph_clustering_coefficient": 6,
-    # rotate OUT (making room for curation_boilerplate_clean, NEW —
-    # the detect→rewrite apply side): ivm_agg_delta is green r6-r9
-    # untouched; the IVM family stays full-gate + pytest-pinned
-    # (test_relational_breadth), and the incremental-view shape keeps
-    # index_postings_upsert + the upsert family in-window.
-    "ivm_agg_delta": 6,
-    # rotate OUT (making room for text_langid_confusion, NEW — the
-    # classifier's confusion-matrix metric): index_postings_upsert
-    # COMPOSES the inverted-index build against the stored postings
-    # every run, so the build shape stays in-window through it;
-    # index_inverted_postings remains benched + full-gate.
-    "index_inverted_postings": 6,
-    # rotate OUT (making room for multimodal_phash_neardup, NEW — the
-    # perceptual near-dup over binary payloads): the multimodal family
-    # swaps its window rep to the new flagship; resize_nn is green
-    # r8-r9 untouched, benched, and its raster arithmetic stays
-    # pytest-pinned (test_multimodal).
-    "multimodal_resize_nn": 6,
-    # rotate OUT (making room for similarity_range_ivf, NEW — the
-    # IVF-served radius search): dns_ip_cidr_attribution is green
-    # r7-r9 untouched and benched; the connector core (rows 1-3) and
-    # the read-pushdown query keep the DNS tier represented in-window.
-    "dns_ip_cidr_attribution": 6,
-    # rotate OUT (making room for sketch_countmin_stream, NEW — sketch
-    # mergeability as a streaming stage): the temporal-join family
-    # keeps asof_join_last_error in-window; the bucketed range join is
-    # green r5-r9 untouched and stays pytest-pinned
-    # (test_bucketed_join) + full-gate + benched.
-    "range_join_bucketed": 6,
-}
-
-
-#: Round-10 rotation, layered over r4+r6+r7+r8+r9 (later map wins).
-#: VERDICT r9 item 1: the driver's correctness gate came back EMPTY in
-#: r9 and the prime repo-side suspect is window WALL-CLOCK — the first
-#: ~50 entries included FOUR streaming queries (each stages files and
-#: runs its own jobs) plus the deliberately-heavy dense-BM25 tier
-#: (7.2 s at sf0.1, same audited plan as index_bm25_topk).  This
-#: round's policy: ONE streaming representative stays in-window
-#: (sessionize_stream_stateful — the stateful applyInPandasWithState
-#: shape, the most distinctive streaming capability), the rest rotate
-#: out; every rotated-out query stays under the full-catalog oracle
-#: gate (ORACLE_FULL_r{N}.json) + the bench every round, and each
-#: leaves an in-window family representative.  The r10-new/changed
-#: queries (similarity_ivf_cell_balance NEW; the whole IVF family's
-#: corpus-scaled KC/nprobe CHANGE) enter via the tier-5 default or are
-#: already in-window (ivf_upsert, ivf_recall, range pair, ivfpq pair).
-_ROTATION_R10: dict[str, int] = {
-    # rotate OUT — streaming entries beyond the single representative:
-    # dedup_minhash_stream (rep: dedup_minhash_incremental exercises
-    # the same persisted-band-index delta algebra batch-side; the
-    # foreachBatch idempotency contract stays pytest-pinned in
-    # test_streaming_dedup.py), sketch_countmin_stream (rep:
-    # sketch_countmin_freq — same d x w cells, same merge algebra,
-    # mergeability pinned by test_countmin.py), and
-    # similarity_pq_upsert_stream (rep: similarity_pq_upsert — the
-    # stream IS the batch upsert inside foreachBatch; byte-equality
-    # pinned by test_pq_upsert.py).
-    "dedup_minhash_stream": 6,
-    "sketch_countmin_stream": 6,
-    "similarity_pq_upsert_stream": 6,
-    # rotate OUT — the 10x-query-density BM25 tier: same audited plan
-    # as in-window index_bm25_topk (single persisted (doc,term) agg,
-    # AQE probe join, WindowGroupLimit); it exists as a bench
-    # measurement, and the bench runs it every round regardless of
-    # tier.
-    "index_bm25_dense": 6,
-    # rotate OUT (making room for similarity_topk_filtered +
-    # similarity_ivf_cell_split, NEW r10): heavy_hitters_events is
-    # green r5-r9 untouched (frequency-estimation family rep:
-    # sketch_countmin_freq stays in-window; the exact top-k algebra is
-    # pytest-pinned in test_heavyhitters.py), and kmeans_lloyd_cells
-    # is green r6-r9 untouched (the identical integer-Lloyd train
-    # algebra runs IN-WINDOW inside every IVF-family oracle via the
-    # kprm/cents chain; the standalone query stays benched +
-    # full-gate + pytest-pinned in test_kmeans.py).
-    "heavy_hitters_events": 6,
-    "kmeans_lloyd_cells": 6,
-}
-
-#: Round-11 rotation, layered over r4..r10 (later map wins).  NEW this
-#: round and auto-in-window by registration order: the cell-maintenance
-#: fixpoint pair and the rare-label filtered pair (q_similarity
-#: registers before the window cutoff).  NEW but registered past the
-#: cutoff: TPC-H Q12/Q16/Q21 — eight twice-green untouched entries
-#: rotate out, sliding the trio plus the r10-green TPC-H Q17/Q19 and
-#: two stale-green connector operators (zone-pushdown read, CIDR
-#: attribution) back into the window.  The IVF serve family whose
-#: oracle text changed this round (nprm empty-corpus guard, load_cents
-#: path) is already in-window at positions 20-31.  Everything rotated
-#: out stays on the full-catalog gate (ORACLE_FULL_rN) every round.
-_ROTATION_R11: dict[str, int] = {
-    # rotate OUT — r9-era PQ/index maintenance tier, green r9+r10
-    # untouched; family representatives staying in-window:
-    # similarity_pq_adc_recall + similarity_topk_ivfpq (the ADC serve
-    # algebra), similarity_ivf_upsert_rebalance (the upsert+maintain
-    # algebra), index_bm25_topk (postings consumers).  All remain on
-    # the full gate + bench + their pytest pins (test_pq_upsert.py,
-    # test_postings_upsert.py).
-    "index_postings_upsert": 6,
-    "similarity_pq_codes": 6,
-    "similarity_pq_upsert": 6,
-    "similarity_pq_drift": 6,
-    "quality_lm_bigram_score": 6,
-    # rotate OUT — green r4..r10 untouched; §2.5 window-function
-    # coverage keeps changelog_scd2_intervals in-window, the BPE
-    # family keeps vocab_bpe_apply on the full gate + bench, Q4's
-    # exists-subquery shape is superseded in-window by Q21's
-    # sole-late-supplier semi/anti chain (the strictly harder variant).
-    "events_cusum_drift": 6,
-    "vocab_bpe_merges": 6,
-    "tpch_q4_order_priority": 6,
-}
-
-#: Inside the driver's window but ordered LAST (see Query.tier).
-TIER_WINDOW_TAIL = 5.5
-
-#: Size of the driver's rotating correctness window (the first N
-#: catalog entries).  Single source of truth for the starve gate
+#: Size of the driver's correctness window (the first N catalog
+#: entries).  Single source of truth for the starve gate
 #: (tests/test_oracle_memory.py) and the gate-repro harness
-#: (tools/gate_repro.py --n default) — ADVICE r13: the two previously
-#: re-hardcoded 50 independently.
+#: (tools/gate_repro.py --n default).
 DRIVER_WINDOW_N = 50
 
-#: Round-12 rotation, layered over r4..r11 (later map wins).  VERDICT
-#: r11 item 1: the gate died at window slot 35/50 inside a 16-entry
-#: ANN tier that sat in the MIDDLE of the window, forfeiting the ten
-#: TPC-H entries behind it.  Three-part fix: (a) the index caches are
-#: now cross-process disk-backed (feeds.cached_index_path), (b) every
-#: in-window ANN entry moves to TIER_WINDOW_TAIL so a death there
-#: forfeits nothing cheap, and (c) the ANN share slims to family
-#: representatives — twice-green maintenance variants rotate out (all
-#: stay on the full-catalog gate ORACLE_FULL_rN + bench every round).
-_ROTATION_R12: dict[str, float] = {
-    # rotate OUT — ANN maintenance/metric variants whose algebra an
-    # in-window representative still composes end-to-end:
-    # similarity_ivf_upsert_rebalance runs upsert + cell-balance +
-    # split-fixpoint in ONE entry (reps for ivf_upsert, cell_balance,
-    # cell_split, cell_split_fixpoint); the rare-filtered pair is the
-    # strictly harder filtered serve (reps for topk_filtered +
-    # filtered_recall); the ivfpq pair composes the ADC algebra (rep
-    # for pq_adc_recall); the range pair stays pytest-pinned
-    # (test_ann_recall_gate) + full-gate + benched.
-    "similarity_ivf_upsert": 6,
-    "similarity_range_ivf": 6,
-    "similarity_range_recall": 6,
-    "similarity_ivf_cell_balance": 6,
-    "similarity_ivf_cell_split": 6,
-    "similarity_ivf_cell_split_fixpoint": 6,
-    "similarity_topk_filtered": 6,
-    "similarity_filtered_recall": 6,
-    "similarity_pq_adc_recall": 6,
-    # move to the window TAIL — the retained ANN representatives (all
-    # index-backed, so the expensive slots run after the cheap §2
-    # evidence is already collected):
-    "similarity_ivf_recall": TIER_WINDOW_TAIL,
-    "similarity_ivf_upsert_rebalance": TIER_WINDOW_TAIL,
-    "similarity_topk_filtered_rare": TIER_WINDOW_TAIL,
-    "similarity_filtered_rare_recall": TIER_WINDOW_TAIL,
-    "similarity_topk_ivfpq": TIER_WINDOW_TAIL,
-    "similarity_ivfpq_recall": TIER_WINDOW_TAIL,
-    # pull the tier-6 entries that backfill the 50-query window up to
-    # 5.4 — without this they sort AFTER the 5.5 ANN tail (tier 6
-    # leaks into the window's final slots), so an ANN-tier death would
-    # forfeit seven CHEAP results; same 50 entries, tail truly last:
-    "dns_read_zone_pushdown": 5.4,
-    "dns_ip_cidr_attribution": 5.4,
-    "hypertable_rollup": 5.4,
-    "changelog_incremental_merge": 5.4,
-    "ivm_join_delta": 5.4,
-    "ivm_agg_delta": 5.4,
-    "range_join_bucketed": 5.4,
-}
-
-#: Round-15 rotation, layered over r4..r12 (later map wins).  VERDICT
-#: r14 item 1 — evidence completion: 28 of the 195 catalog queries had
-#: never held a driver-window row across rounds 1-14 (union of all
-#: CORRECTNESS_r*.json); this round rotates EVERY one of them in, so
-#: after r15 the full catalog has at least one external green row.
-#: Window composition (50 = DRIVER_WINDOW_N):
-#:
-#: - tier 4.5 (first): the 5-query connector core — reference-§2
-#:   evidence is never forfeited, whatever dies behind it;
-#: - tier 5: the 8 CHEAP never-windowed entries (ORC roundtrip,
-#:   greedy packing, pivot, label propagation, TPC-H Q2/Q9/Q11/Q20),
-#:   16 stale-green backfills whose last driver row was r5 (the
-#:   §2 changelog/function/window/set families — refreshed evidence,
-#:   and cheap map/agg shapes that keep the window's failure-forfeit
-#:   small), and multimodal_phash_neardup (semantically CHANGED this
-#:   round: hash-sampled verify bound, VERDICT r14 item 5);
-#: - tier 5.45: the never-windowed streaming/incremental mid-tier
-#:   (minhash + count-min stream variants, postings upsert, MMR
-#:   rerank).  NOTE the r9 one-streaming-query window cap is
-#:   deliberately lifted FOR THIS ROUND ONLY — the 4 streaming
-#:   variants are the last never-windowed streaming evidence, the
-#:   r14 starve gate makes them allocator-safe by construction, and
-#:   the r14 gate ran 153 s against a 1500 s budget (10x headroom);
-#:   tests/test_driver_contract.py pins the exception explicitly;
-#: - tier 5.5 (tail, forfeits least on a late death — r11 lesson):
-#:   the never-windowed index-backed families (IVF maintenance:
-#:   upsert/delete/cell balance/split/fixpoint; range serve+recall;
-#:   filtered serve+recall; PQ upsert/drift + its stream variant;
-#:   semantic-dedup incremental+stream; BM25 dense — CHANGED this
-#:   round: term-bucketed persisted postings, VERDICT r14 item 3 —
-#:   and hybrid RRF fusion which serves from it).
-#:
-#: Rotated OUT to make room: the entire r14 window except the
-#: connector core and phash (44 entries, every one r14-green on the
-#: driver's own gate — the freshest possible evidence, so they are
-#: exactly the rows the window can afford to drop; all remain on the
-#: full-catalog gate ORACLE_FULL_rN + bench every round).
-_ROTATION_R15: dict[str, float] = {
-    # connector core first
-    "dns_axfr_read": 4.5,
-    "dns_ixfr_delta_read": 4.5,
-    "dns_stream_sink_roundtrip": 4.5,
-    "dns_read_zone_pushdown": 4.5,
-    "dns_ip_cidr_attribution": 4.5,
-    # never-windowed cheap
-    "format_orc_roundtrip": 5,
-    "pack_greedy_bins": 5,
-    "orders_pivot_status": 5,
-    "dedup_cluster_label_propagation": 5,
-    "tpch_q2_min_cost_supplier": 5,
-    "tpch_q9_product_type_profit": 5,
-    "tpch_q11_important_stock": 5,
-    "tpch_q20_potential_promotion": 5,
-    # stale-green backfill (last driver row r5)
-    "changelog_latest_wins": 5,
-    "fqdn_normalize": 5,
-    "zone_from_fqdn": 5,
-    "group_by_zone": 5,
-    "validate_updates": 5,
-    "json_extract": 5,
-    "json_roundtrip": 5,
-    "distinct_zones": 5,
-    "zone_serial_max": 5,
-    "exactly_once_check": 5,
-    "chronological_topk": 5,
-    "tpch_q1_pricing_summary": 5,
-    "revenue_by_nation": 5,
-    "sessionize_window_native": 5,
-    "tumbling_window_counts": 5,
-    "segment_union_distinct": 5,
-    # changed this round (verify-side hash-sampled pair bound)
-    "multimodal_phash_neardup": 5,
-    # never-windowed streaming/incremental mid-tier
-    "dedup_minhash_stream": 5.45,
-    "sketch_countmin_stream": 5.45,
-    "index_postings_upsert": 5.45,
-    "retrieval_mmr_rerank": 5.45,
-    # never-windowed index-backed tail
-    "similarity_ivf_upsert": TIER_WINDOW_TAIL,
-    "similarity_ivf_delete_serve": TIER_WINDOW_TAIL,
-    "similarity_range_ivf": TIER_WINDOW_TAIL,
-    "similarity_range_recall": TIER_WINDOW_TAIL,
-    "similarity_ivf_cell_balance": TIER_WINDOW_TAIL,
-    "similarity_topk_filtered": TIER_WINDOW_TAIL,
-    "similarity_ivf_cell_split": TIER_WINDOW_TAIL,
-    "similarity_ivf_cell_split_fixpoint": TIER_WINDOW_TAIL,
-    "similarity_filtered_recall": TIER_WINDOW_TAIL,
-    "similarity_pq_upsert": TIER_WINDOW_TAIL,
-    "similarity_pq_drift": TIER_WINDOW_TAIL,
-    "similarity_pq_upsert_stream": TIER_WINDOW_TAIL,
-    "dedup_semantic_incremental": TIER_WINDOW_TAIL,
-    "dedup_semantic_stream": TIER_WINDOW_TAIL,
-    "index_bm25_dense": TIER_WINDOW_TAIL,
-    "similarity_hybrid_rrf": TIER_WINDOW_TAIL,
-    # rotate OUT — the 44 r14-green window entries not retained above
-    "asof_join_last_error": 6,
-    "text_langid_confusion": 6,
-    "dedup_minhash_incremental": 6,
-    "dedup_exact_substring": 6,
-    "dedup_url_canonical": 6,
-    "dedup_cluster_star_contraction": 6,
-    "mlprep_leakage_free_split": 6,
-    "sketch_countmin_freq": 6,
-    "curation_boilerplate_fraction": 6,
-    "contamination_bloom_filter": 6,
-    "curation_boilerplate_clean": 6,
-    "pack_tokens_stream": 6,
-    "graph_pagerank_transitions": 6,
-    "changelog_max_by_variant": 6,
-    "sessionize_stream_stateful": 6,
-    "index_bm25_topk": 6,
-    "validate_quality_constraints": 6,
-    "changelog_scd2_intervals": 6,
-    "tpch_q5_local_supplier_volume": 6,
-    "tpch_q7_volume_shipping": 6,
-    "tpch_q8_market_share": 6,
-    "tpch_q10_returned_items": 6,
-    "tpch_q14_promo_revenue": 6,
-    "tpch_q17_small_quantity_revenue": 6,
-    "tpch_q19_disjunctive_revenue": 6,
-    "tpch_q12_shipmode_priority": 6,
-    "tpch_q16_supplier_part_counts": 6,
-    "tpch_q21_waiting_suppliers": 6,
-    "hypertable_rollup": 6,
-    "changelog_incremental_merge": 6,
-    "ivm_join_delta": 6,
-    "ivm_agg_delta": 6,
-    "range_join_bucketed": 6,
-    "dedup_semantic_semdedup": 6,
-    "similarity_ivf_recall": 6,
-    "similarity_ivf_upsert_rebalance": 6,
-    "similarity_topk_filtered_rare": 6,
-    "similarity_filtered_rare_recall": 6,
-    "similarity_upsert_serve_fresh": 6,
-    "similarity_topk_ivfpq": 6,
-    "similarity_ivfpq_recall": 6,
-    "similarity_topk_filtered_ivfpq": 6,
-    "similarity_filtered_ivfpq_recall": 6,
-    "retrieval_filtered_fused_mmr": 6,
-}
+#: The driver window, in check order; every other query follows in
+#: registration order.  The connector core goes first so its evidence
+#: survives whatever dies behind it.  Index-backed entries go last, so
+#: a late gate death forfeits the least evidence.  The four streaming
+#: entries are a deliberate exception to the one-streaming-query cap,
+#: pinned by tests/test_driver_contract.py.
+DRIVER_WINDOW: tuple[str, ...] = (
+    # connector core
+    "dns_axfr_read",
+    "dns_ixfr_delta_read",
+    "dns_read_zone_pushdown",
+    "dns_stream_sink_roundtrip",
+    "dns_ip_cidr_attribution",
+    # cheap §2 operators and TPC-H
+    "dedup_cluster_label_propagation",
+    "format_orc_roundtrip",
+    "pack_greedy_bins",
+    "changelog_latest_wins",
+    "fqdn_normalize",
+    "zone_from_fqdn",
+    "group_by_zone",
+    "validate_updates",
+    "json_extract",
+    "json_roundtrip",
+    "distinct_zones",
+    "zone_serial_max",
+    "exactly_once_check",
+    "chronological_topk",
+    "multimodal_phash_neardup",
+    "sessionize_window_native",
+    "tumbling_window_counts",
+    "tpch_q1_pricing_summary",
+    "revenue_by_nation",
+    "segment_union_distinct",
+    "orders_pivot_status",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q9_product_type_profit",
+    "tpch_q11_important_stock",
+    "tpch_q20_potential_promotion",
+    # streaming / incremental
+    "dedup_minhash_stream",
+    "sketch_countmin_stream",
+    "retrieval_mmr_rerank",
+    "index_postings_upsert",
+    # index-backed ANN
+    "similarity_ivf_upsert",
+    "similarity_ivf_delete_serve",
+    "dedup_semantic_incremental",
+    "dedup_semantic_stream",
+    "similarity_range_ivf",
+    "similarity_range_recall",
+    "similarity_ivf_cell_balance",
+    "similarity_topk_filtered",
+    "similarity_ivf_cell_split",
+    "similarity_ivf_cell_split_fixpoint",
+    "similarity_filtered_recall",
+    "similarity_hybrid_rrf",
+    "index_bm25_dense",
+    "similarity_pq_upsert",
+    "similarity_pq_upsert_stream",
+    "similarity_pq_drift",
+)
 
 
 def register(
@@ -912,7 +209,6 @@ def register(
     sql: str | None,
     doc: str = "",
     tags: tuple[str, ...] = (),
-    tier: int = 5,
 ) -> Callable:
     """Decorator: add a (spark, sf_dir) -> DataFrame builder to the catalog."""
 
@@ -932,23 +228,18 @@ def register(
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
-        _REGISTRY[name] = Query(
-            name=name, fn=wrapped, sql=sql, doc=doc, tags=tags, tier=tier
-        )
+        _REGISTRY[name] = Query(name=name, fn=wrapped, sql=sql, doc=doc, tags=tags)
         return wrapped
 
     return deco
 
 
 def catalog() -> dict[str, Query]:
-    """All registered queries (importing the query modules as a side effect)."""
+    """All registered queries (importing the query modules as a side
+    effect): :data:`DRIVER_WINDOW` first, in tuple order, then every
+    other query in registration order.  Raises ValueError when a window
+    name is unregistered or listed twice."""
     # Import here so module import order can't produce a half-filled registry.
-    #
-    # Registration ORDER is deliberate (VERDICT r2 item 1): the driver's
-    # correctness window covers roughly the first 50 entries, so the
-    # reference-core connector tier, the newest LLM-pipeline tiers, and any
-    # query fixed this round must register early; the redundant TPC-H shapes
-    # in q_relational (green in r1+r2) absorb the overflow at the tail.
     from spark_dns_spark.plans import (  # noqa: F401
         q_connector,
         q_rollup_time,
@@ -984,15 +275,12 @@ def catalog() -> dict[str, Query]:
         q_tpch2,
     )
 
-    order = {n: i for i, n in enumerate(_REGISTRY)}
-    rotation = {
-        **_ROTATION_R4, **_ROTATION_R6, **_ROTATION_R7, **_ROTATION_R8,
-        **_ROTATION_R9, **_ROTATION_R10, **_ROTATION_R11, **_ROTATION_R12,
-        **_ROTATION_R15,
-    }
-    for q in _REGISTRY.values():
-        q.tier = rotation.get(q.name, q.tier)
-    return {
-        q.name: q
-        for q in sorted(_REGISTRY.values(), key=lambda q: (q.tier, order[q.name]))
-    }
+    out: dict[str, Query] = {}
+    for n in DRIVER_WINDOW:
+        if n in out:
+            raise ValueError(f"DRIVER_WINDOW lists {n!r} twice")
+        if n not in _REGISTRY:
+            raise ValueError(f"DRIVER_WINDOW names unregistered query {n!r}")
+        out[n] = _REGISTRY[n]
+    out.update(_REGISTRY)  # window keys keep their position
+    return out

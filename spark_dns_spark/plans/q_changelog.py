@@ -30,7 +30,6 @@ SELECT action, fqdn, ip, ts, event_id FROM (
 """,
     doc="A2 argmax dedup on the reference identity key (DnsUpdate.java:46-54)",
     tags=("changelog", "window"),
-    tier=8,  # green r1+r2; rotated past the driver window for newer tiers
 )
 def changelog_latest_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -74,7 +73,6 @@ GROUP BY action, fqdn, ip
     doc="A2 as an aggregation (max_by) instead of a window — partial "
     "map-side combine, no per-key sort; preferred at 100 TB",
     tags=("changelog", "agg"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def changelog_max_by_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Deterministic lexicographic argmax on (ts, event_id): the key is
@@ -105,7 +103,6 @@ FROM dns_changes GROUP BY 1, 2
 """,
     doc="F6 fqdn normalize (DnsPartitionHandler.java:85-94)",
     tags=("scalar",),
-    tier=8,  # green r1+r2; rotated past the driver window for newer tiers
 )
 def q_fqdn_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -134,7 +131,6 @@ SELECT fqdn, zone, count(*) AS n FROM (
 """,
     doc="F5 zone derivation (DnsPartitionHandler.java:52-62)",
     tags=("scalar",),
-    tier=8,  # green r1+r2; rotated past the driver window for newer tiers
 )
 def q_zone_from_fqdn(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -166,7 +162,6 @@ GROUP BY zone, action
     doc="A1 group-updates-by-zone (DnsPartitionHandler.java:30-44), made "
     "global instead of per-partition",
     tags=("changelog", "agg"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_group_by_zone(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cl.group_updates_by_zone(dns_changes(spark, sf_dir))
@@ -194,7 +189,6 @@ SELECT violation, count(*) AS n FROM (
     doc="P4 validation predicates (DnsPartitionHandler.java:69-77); ttl "
     "synthesized as event_id%7-3 to exercise the <=0 branch",
     tags=("changelog", "filter"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_validate_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir).withColumn(
@@ -216,7 +210,6 @@ FROM (
     doc="F4 JSON decode (DnsBatchPartitionHandler.java:47-51) as "
     "get_json_object — JVM-side, no Python",
     tags=("scalar", "json"),
-    tier=8,  # green r1+r2; rotated past the driver window for newer tiers
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir)
@@ -243,7 +236,6 @@ SELECT action2 AS action, fqdn2 AS fqdn, count(*) AS n FROM (
     doc="F3+F4 sink wire-encoding round-trip: to_json(struct(*)) then decode "
     "(DnsSinkRelationProvider.java:25-27)",
     tags=("scalar", "json"),
-    tier=8,  # green r1+r2; rotated past the driver window for newer tiers
 )
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_dns_spark.functions.dnsfn import encode_update_json
@@ -276,7 +268,6 @@ FROM (
 """,
     doc="P5 distinct zone list (DnsSourceOptions.java:61-65)",
     tags=("set",),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_distinct_zones(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -304,7 +295,6 @@ GROUP BY zone
     doc="A3 max-merge zone-serial accumulator (ZoneVersion.java:43-47) as "
     "max() aggregation",
     tags=("agg",),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_zone_serial_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = cl.group_updates_by_zone(dns_changes(spark, sf_dir))
@@ -325,7 +315,6 @@ HAVING count(*) > 1
     doc="A4 exactly-once assertion shape "
     "(DnsSourceRelationProviderTest.java:214-225): duplicate groups",
     tags=("agg", "test-shape"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_exactly_once_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -348,7 +337,6 @@ LIMIT 100
     doc="O1 chronological ordering (DnsChronologicalChange.java:10-17) as "
     "top-k with deterministic tie-break",
     tags=("sort", "limit"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def q_chronological_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = dns_changes(spark, sf_dir)
@@ -380,7 +368,6 @@ WHERE levenshtein(a.zone, b.zone) <= 2
     "— the classic DNS-abuse analytic; the distinct-zone self-join is "
     "tiny (zones, not fqdns), so all-pairs is the right plan here",
     tags=("changelog", "scalar", "dns"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def dns_typosquat_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones = (

@@ -823,7 +823,6 @@ WITH pairs AS ({MINHASH_LSH_SQL}
     "never move, and rounds chain lazily (linear lineage, no "
     "checkpoint needed)",
     tags=("dedup", "cluster", "graph", "iterative"),
-    tier=6,
 )
 def dedup_cluster_label_propagation(
     spark: SparkSession, sf_dir: str

@@ -1195,7 +1195,6 @@ def _ivfpq_shortlist_from_icand(
     "exact cosine re-rank only the shortlist.  Exact-oracle: the same "
     "index algebra + label equi-join + ADC decode in both engines",
     tags=("similarity", "ivf", "pq", "filtered"),
-    tier=5.5,
 )
 def similarity_topk_filtered_ivfpq(
     spark: SparkSession, sf_dir: str
@@ -1247,7 +1246,6 @@ GROUP BY b.query_id
     "neighbors from the ADC shortlist (the pool-scaled shortlist is "
     "the fix).  Floor gated at 0.75 in tests/test_ann_recall_gate.py",
     tags=("similarity", "ivf", "pq", "filtered", "metric"),
-    tier=5.5,
 )
 def similarity_filtered_ivfpq_recall(
     spark: SparkSession, sf_dir: str
@@ -1379,7 +1377,6 @@ _FUSED_MMR_SQL = (
     "query) — the corpus is touched only through the indexes.  Oracle "
     "unrolls the identical greedy rounds",
     tags=("similarity", "retrieval", "fusion", "rerank", "filtered"),
-    tier=5.5,
 )
 def retrieval_filtered_fused_mmr(
     spark: SparkSession, sf_dir: str

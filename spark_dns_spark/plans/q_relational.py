@@ -37,7 +37,6 @@ GROUP BY l_returnflag, l_linestatus
 """,
     doc="TPC-H Q1 shape: scan-side filter pushdown + 8-agg groupBy",
     tags=("relational", "agg", "bench"),
-    tier=9,
 )
 def tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -73,7 +72,6 @@ GROUP BY n_name, r_name
 """,
     doc="TPC-H Q5 shape: 5-way star join; dims broadcast, fact shuffled once",
     tags=("relational", "join", "bench"),
-    tier=9,
 )
 def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -113,7 +111,6 @@ SELECT n_name, c_name, spent, rk FROM (
 """,
     doc="top-k per group: agg then rank window, deterministic tie-break",
     tags=("relational", "window"),
-    tier=9,
 )
 def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -143,7 +140,6 @@ GROUP BY p_brand
 """,
     doc="anti-join (NOT EXISTS) + agg: parts never ordered in bulk",
     tags=("relational", "join"),
-    tier=9,
 )
 def parts_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
@@ -166,7 +162,6 @@ WHERE s_suppkey IN (
 """,
     doc="semi-join (EXISTS) with pushed-down filter on the probe side",
     tags=("relational", "join"),
-    tier=9,
 )
 def active_suppliers_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = load_table(spark, sf_dir, "supplier")
@@ -186,7 +181,6 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """,
     doc="grouping-sets rollup (Catalyst-supplied; absent in reference §2.4)",
     tags=("relational", "agg"),
-    tier=9,
 )
 def order_priority_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -204,7 +198,6 @@ SELECT o_orderpriority AS segment FROM orders WHERE o_totalprice > 100000
 """,
     doc="set op: UNION DISTINCT across heterogeneous projections (§2.7)",
     tags=("relational", "set"),
-    tier=9,
 )
 def segment_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -234,7 +227,6 @@ WHERE l_suppkey <= 10
     doc="frame-spec window (running sum) + lag — §2.5 gap in reference, "
     "built-in here",
     tags=("relational", "window"),
-    tier=9,
 )
 def lineitem_running_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_suppkey") <= 10)
@@ -263,7 +255,6 @@ FROM lineitem GROUP BY l_returnflag
     doc="count-distinct per group (exact; approx_count_distinct exercised "
     "in tests where sketches need no cross-engine oracle)",
     tags=("relational", "agg"),
-    tier=9,
 )
 def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -285,7 +276,6 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
     doc="CUBE over (returnflag, linestatus) with grouping_id — the full "
     "2^k aggregation lattice in one pass (§2.4 grouping-sets family)",
     tags=("relational", "agg", "cube"),
-    tier=9,
 )
 def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -308,7 +298,6 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
     doc="explicit GROUPING SETS (status) / (priority) / (grand total) "
     "via the SQL surface — one shuffle, no self-union",
     tags=("relational", "agg", "grouping-sets"),
-    tier=9,
 )
 def orders_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
@@ -338,7 +327,6 @@ FROM lineitem GROUP BY l_returnflag
     "variant (approx_percentile/t-digest) swaps in one function call "
     "at 100 TB",
     tags=("relational", "agg", "percentile"),
-    tier=9,
 )
 def lineitem_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -364,7 +352,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
     "into the parquet scan (the pushdown showcase; see "
     "tests/test_plan_shapes.py for the PushedFilters assertion)",
     tags=("relational", "tpch"),
-    tier=9,
 )
 def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -401,7 +388,6 @@ LIMIT 10
     doc="TPC-H Q3 shape: selective dim filter broadcast into a 3-table "
     "star join, grouped revenue, deterministic top-k",
     tags=("relational", "tpch", "join"),
-    tier=9,
 )
 def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").filter(
@@ -449,7 +435,6 @@ SELECT 'except' AS op, seg FROM (
     doc="set-op breadth (§2.7): INTERSECT and EXCEPT (distinct "
     "semantics) in one tagged result",
     tags=("relational", "set"),
-    tier=9,
 )
 def segment_intersect_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
@@ -495,7 +480,6 @@ GROUP BY c_mktsegment
     "orders survive the join as null-extended rows and are counted "
     "separately — the outer-join tier of the §2.3 join family",
     tags=("relational", "join", "outer"),
-    tier=9,
 )
 def customers_order_stats_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")

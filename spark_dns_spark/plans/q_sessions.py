@@ -113,7 +113,6 @@ FROM sess GROUP BY user_id, sid
     "operator run in batch; window end = last event + gap, boundary "
     "event at exactly prev+gap starts a new session (exclusive end)",
     tags=("sessions", "window"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def sessionize_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select("ts", "user_id")
@@ -222,7 +221,6 @@ FROM events GROUP BY 1, 2
     "F.window expression runs unchanged under readStream + watermark "
     "(late-data behavior covered in tests/test_streaming_window.py)",
     tags=("sessions", "window"),
-    tier=6,  # green r1+r2, unchanged in r3 - rotated past the driver window
 )
 def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir).select("ts", "event_type", "value")

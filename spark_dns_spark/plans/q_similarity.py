@@ -819,7 +819,6 @@ _IVF_DELETE_SQL = (
     "modulo filter to the postings scan; at 100 TB deletes batch into "
     "a bloom/broadcast anti-join per probe instead of a rewrite",
     tags=("similarity", "ivf", "incremental"),
-    tier=6,
 )
 def similarity_ivf_delete_serve(
     spark: SparkSession, sf_dir: str
@@ -1078,9 +1077,6 @@ FROM sd1 LEFT JOIN dropped d ON d.vec_id = sd1.vec_id
     "the two id-keyed cosine gathers (twelfth dedup family: the "
     "cluster-then-prune semantic tier)",
     tags=("dedup", "similarity", "semantic"),
-    # window TAIL, not mid-window: first IVF-index consumer in a cold
-    # process pays the build — that belongs after the cheap §2 evidence
-    tier=5.5,
 )
 def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _vectors(spark, sf_dir)
@@ -1206,7 +1202,6 @@ FROM sd1 LEFT JOIN vb b ON b.vec_id = sd1.vec_id
     "cosine gathers see vectors.  Oracle trains on the base and "
     "unrolls the same two dominance checks",
     tags=("dedup", "similarity", "semantic", "incremental"),
-    tier=6,
 )
 def dedup_semantic_incremental(
     spark: SparkSession, sf_dir: str
@@ -1379,7 +1374,6 @@ FROM sdd LEFT JOIN vb ON vb.vec_id = sdd.vec_id
     "that gap.  Scale: per-wave cost is assignment + within-cell "
     "probes; the admitted index grows by exactly the wave's keeps",
     tags=("dedup", "similarity", "semantic", "incremental", "streaming"),
-    tier=6,
 )
 def dedup_semantic_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os  # noqa: PLC0415
@@ -3077,10 +3071,8 @@ SELECT query_id, neighbor_id, rrf_e6, n_sources, rank FROM (
     "fusion runs on the SERVES' outputs (|Q| x k rows each), never on "
     "the corpus — union + one grouped sum + per-query top-k; the "
     "integer contributions make the fused score hash-exact across "
-    "engines.  Registered tier 6 (window evidence already shipped); "
-    "covered by the full-catalog gate",
+    "engines",
     tags=("similarity", "retrieval", "fusion"),
-    tier=6,
 )
 def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivfr = _ivf_topk(spark, sf_dir).select("query_id", "neighbor_id", "rank")
@@ -3220,9 +3212,8 @@ WITH base AS MATERIALIZED (
     "int64 — the kernel compares exactly the integers the unrolled "
     "oracle compares); the corpus is never touched again.  The oracle "
     "unrolls the identical greedy rounds (the cell-split fixpoint "
-    "pattern).  Registered tier 6 (window evidence shipped)",
+    "pattern)",
     tags=("similarity", "retrieval", "rerank"),
-    tier=6,
 )
 def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _vectors(spark, sf_dir)
@@ -3402,7 +3393,6 @@ FROM srv
     "POST-upsert corpus size (the index now holds n vectors), cell "
     "count from the stored model (trained at base size)",
     tags=("similarity", "ivf", "incremental", "metric"),
-    tier=5.5,
 )
 def similarity_upsert_serve_fresh(
     spark: SparkSession, sf_dir: str

@@ -667,10 +667,6 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   ps_availqty       = (ps_partkey*13 + ps_suppkey*7)  % 9999 + 1
 #   ps_supplycost_e4  = (ps_partkey*31 + ps_suppkey*17) % 90000 + 10000
 # (supply cost in the house 1e-4-dollar units: $1.0000-$9.9999).
-# Registered tier=6 — the r11 window evidence (WINDOW_TIMING_r11 /
-# GATE_REPRO_r11) pins the window that shipped; the in-window partsupp
-# representatives are Q12/Q16/Q21, and these four are covered by the
-# full-catalog gate, the sf1 gate, and the suite.
 # ---------------------------------------------------------------------------
 
 _PS_CTE = """
@@ -732,7 +728,6 @@ WHERE p.p_size BETWEEN 10 AND 20 AND p.p_type IN ('LARGE', 'STANDARD')
     "part scan.  s_acctbal is a raw-column pass-through (no float "
     "arithmetic), so the double survives hash equality",
     tags=("relational", "join", "agg", "subquery"),
-    tier=6,
 )
 def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -801,7 +796,6 @@ GROUP BY n_name, o_year
     "p_name LIKE filter pushes to the part scan and prunes the fact "
     "rows before the partsupp join; nation broadcasts",
     tags=("relational", "join", "agg", "bench"),
-    tier=6,
 )
 def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -857,7 +851,6 @@ SELECT ps_partkey, value_e4 FROM pv, tot WHERE value_e4 * 1000 > t
     "class — and the threshold compare is pure integer "
     "(value x 1000 > total, no float fraction)",
     tags=("relational", "join", "agg", "subquery"),
-    tier=6,
 )
 def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)
@@ -911,7 +904,6 @@ WHERE n_name = 'NATION_5'
     "supplier dim.  The oracle keeps the textbook nested-IN "
     "formulation as an independent cross-check",
     tags=("relational", "join", "semi", "subquery"),
-    tier=6,
 )
 def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     ps = _partsupp(spark, sf_dir)

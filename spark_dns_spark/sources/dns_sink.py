@@ -31,7 +31,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import Row, StructType
 
-from spark_dns_spark.sources.options import DnsOptions, _get
+from spark_dns_spark.sources.options import DnsOptions
 from spark_dns_spark.sources.zonestore import (
     AXFR,
     IXFR_ADD,
@@ -84,19 +84,11 @@ class DnsWriteCommit(WriterCommitMessage):
 
 class DnsUpdateWriter(DataSourceWriter):
     def __init__(self, options: dict):
-        self.opts = DnsOptions.parse(options)
-        self.ignore_failures = (
-            str(_get(options, "ignore-failures", "false")).lower() == "true"
-        )
         # transport=wire: per-zone RFC 2136 UPDATE messages TCP-sent to
         # a live server at store/server:port (the reference's only
         # write path, DnsUpdate.java:46-81); transport=store (default):
         # deterministic file-backed ZoneStore.
-        self.transport = str(_get(options, "transport", "store")).lower()
-        if self.transport not in ("store", "wire"):
-            from spark_dns_spark.sources.options import OptionError  # noqa: PLC0415
-
-            raise OptionError(f"invalid transport: {self.transport}")
+        self.opts = DnsOptions.parse(options)
 
     def write(self, iterator: Iterator[Row]) -> DnsWriteCommit:
         # Buffer-per-partition mirrors the reference's per-partition
@@ -134,7 +126,7 @@ class DnsUpdateWriter(DataSourceWriter):
             )
 
         store = None
-        if self.transport == "store":
+        if self.opts.transport == "store":
             store = ZoneStore(self.opts.store)
             # same TCP-client failure model as the read path (bad port ⇒
             # refused); not suppressable here — the reference sink throws
@@ -172,7 +164,7 @@ class DnsUpdateWriter(DataSourceWriter):
                         [(a, f, i, t) for (_, _, a, f, i, t) in ordered],
                     )
             except ZoneNotFoundError:
-                if self.ignore_failures:
+                if self.opts.ignore_failures:
                     continue
                 raise
             applied.append(zone)

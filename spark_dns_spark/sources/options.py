@@ -88,6 +88,11 @@ class DnsOptions:
     port: int = 53
     timeout: float = 10.0  # seconds, default mirrors DnsOptions.java:24-25
     organization: str = ""
+    ignore_failures: bool = False
+    #: 'store' (file-backed simulator, default) or 'wire' (a live
+    #: server: dnspython transfers on read, RFC 2136 UPDATE messages on
+    #: write — transport.py / update_wire.py).
+    transport: str = "store"
 
     @classmethod
     def parse(cls, options: dict) -> "DnsOptions":
@@ -109,11 +114,18 @@ class DnsOptions:
         timeout = float(_get(options, "timeout", 10))
         if timeout < 0:
             raise OptionError(f"invalid timeout: {timeout}")
+        transport = str(_get(options, "transport", "store")).lower()
+        if transport not in ("store", "wire"):
+            raise OptionError(f"invalid transport: {transport}")
         return cls(
             store=store,
             port=port,
             timeout=timeout,
             organization=_get(options, "organization", "") or "",
+            ignore_failures=(
+                str(_get(options, "ignore-failures", "false")).lower() == "true"
+            ),
+            transport=transport,
         )
 
 
@@ -124,7 +136,6 @@ class DnsSourceOptions(DnsOptions):
     zones: list[str] = field(default_factory=list)
     xfr: str = XFR_IXFR
     serial: int = 0
-    ignore_failures: bool = False
     fail_zones: list[str] = field(default_factory=list)  # test fault injection
     max_kept_commits: int = 10  # streaming progress retention (O2)
     #: Streaming admission control (kafka ``maxOffsetsPerTrigger``
@@ -133,16 +144,10 @@ class DnsSourceOptions(DnsOptions):
     #: per-zone serial advance of each micro-batch so a backlog drains
     #: across triggers.  0 = unlimited (reference behavior).
     max_changes_per_batch: int = 0
-    #: 'store' (file-backed simulator, default) or 'wire' (dnspython
-    #: against a live server — transport.py; needs dnspython installed).
-    transport: str = "store"
 
     @classmethod
     def parse(cls, options: dict) -> "DnsSourceOptions":
         base = DnsOptions.parse(options)
-        transport = str(_get(options, "transport", "store")).lower()
-        if transport not in ("store", "wire"):
-            raise OptionError(f"invalid transport: {transport}")
         zones_csv = _get(options, "zones", "") or ""
         # P5: CSV → trimmed, de-duplicated, order-preserving
         # (DnsSourceOptions.java:61-65)
@@ -157,7 +162,6 @@ class DnsSourceOptions(DnsOptions):
         serial = int(_get(options, "serial", 0))
         if serial < 0:
             raise OptionError(f"invalid serial: {serial}")
-        ignore = str(_get(options, "ignore-failures", "false")).lower() == "true"
         fail_zones = [
             z.strip()
             for z in str(_get(options, "fail-zones", "")).split(",")
@@ -172,16 +176,11 @@ class DnsSourceOptions(DnsOptions):
                 f"invalid max-changes-per-batch: {max_changes}"
             )
         return cls(
-            store=base.store,
-            port=base.port,
-            timeout=base.timeout,
-            organization=base.organization,
+            **vars(base),
             zones=zones,
             xfr=xfr,
             serial=serial,
-            ignore_failures=ignore,
             fail_zones=fail_zones,
             max_kept_commits=kept,
             max_changes_per_batch=max_changes,
-            transport=transport,
         )

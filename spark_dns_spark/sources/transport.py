@@ -36,6 +36,7 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 from collections.abc import Callable, Sequence
 
+from spark_dns_spark.sources.options import DnsSourceOptions, OptionError
 from spark_dns_spark.sources.zonestore import (
     AXFR,
     IXFR_ADD,
@@ -344,22 +345,19 @@ class WireTransport(ZoneTransport):
         raise ZoneNotFoundError(f"no SOA answer for {zone}")
 
 
-def make_transport(opts) -> ZoneTransport:
-    """Build the transport an options object selects.
+def make_transport(opts: DnsSourceOptions) -> ZoneTransport:
+    """Build the transport the read options select.
 
     ``transport=store`` (default) — :class:`FileStoreTransport` over
     ``opts.store``; ``transport=wire`` — :class:`WireTransport` against
     the host in ``opts.store``/``server`` on ``opts.port``.
     """
-    kind = getattr(opts, "transport", "store")
-    if kind == "wire":
-        if not getattr(opts, "zones", None):
+    if opts.transport == "wire":
+        if not opts.zones:
             # a server's zone list is not discoverable over DNS:
             # without explicit zones the source would plan zero
             # partitions / an empty offset map and "succeed" with no
             # data (ADVICE r3) — surface the constraint instead.
-            from spark_dns_spark.sources.options import OptionError  # noqa: PLC0415
-
             raise OptionError(
                 "transport=wire requires the 'zones' option: a live "
                 "server cannot enumerate its zones"

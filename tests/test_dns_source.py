@@ -210,6 +210,13 @@ def test_option_validation_errors(spark, store):
     ).max_changes_per_batch == 7
     with pytest.raises(OptionError):
         DnsSourceOptions.parse({"store": "/x", "max-changes-per-batch": "-1"})
+    # the sink parses the same common options: transport checked,
+    # ignore-failures default false
+    from spark_dns_spark.sources.dns_sink import DnsUpdateWriter
+
+    with pytest.raises(OptionError, match="invalid transport: bogus"):
+        DnsUpdateWriter({"store": "/x", "transport": "bogus"})
+    assert DnsUpdateWriter({"store": "/x"}).opts.ignore_failures is False
 
 
 def test_non_a_records_filtered_at_transfer(store):

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
 import __spark_entry__ as entrymod
 
 
@@ -91,3 +93,39 @@ def test_window_streaming_entries_pinned():
         "similarity_pq_upsert_stream",
         "sketch_countmin_stream",
     ], streaming
+
+
+def test_driver_window_is_declared_once():
+    from spark_dns_spark.plans.catalog import (
+        DRIVER_WINDOW,
+        DRIVER_WINDOW_N,
+        catalog,
+    )
+
+    assert len(DRIVER_WINDOW) == DRIVER_WINDOW_N
+    assert len(set(DRIVER_WINDOW)) == DRIVER_WINDOW_N
+    assert list(catalog())[:DRIVER_WINDOW_N] == list(DRIVER_WINDOW)
+
+
+def test_catalog_tail_follows_registration_order():
+    from spark_dns_spark.plans import catalog as catmod
+
+    names = list(catmod.catalog())
+    window = set(catmod.DRIVER_WINDOW)
+    registered_tail = [n for n in catmod._REGISTRY if n not in window]
+    assert names[catmod.DRIVER_WINDOW_N :] == registered_tail
+    assert set(names) == set(catmod._REGISTRY)
+
+
+def test_catalog_rejects_a_bad_window(monkeypatch):
+    from spark_dns_spark.plans import catalog as catmod
+
+    good = catmod.DRIVER_WINDOW
+    monkeypatch.setattr(
+        catmod, "DRIVER_WINDOW", good[:-1] + ("no_such_query",)
+    )
+    with pytest.raises(ValueError, match="no_such_query"):
+        catmod.catalog()
+    monkeypatch.setattr(catmod, "DRIVER_WINDOW", good[:-1] + (good[0],))
+    with pytest.raises(ValueError, match="twice"):
+        catmod.catalog()

@@ -64,3 +64,37 @@ def test_serve_plan_reads_postings_not_retrain(spark, sf_dir):
     assert f"{root}/cents" not in plan, (
         "centroids must be collected driver-side (K rows), not joined"
     )
+
+
+def test_rare_label_count_matches_distinct(spark, sf_dir):
+    """The persisted index stats value equals the distinct().count()
+    job it replaced (the serve reads metadata, the oracle re-derives
+    from data — both must see the same cardinality)."""
+    n = qs._vectors(spark, sf_dir)
+    expect = (
+        n.select((F.col("vec_id") % qs.RARE_MOD).alias("r"))
+        .distinct()
+        .count()
+    )
+    assert qs.rare_label_count(spark, sf_dir) == max(expect, 1)
+
+
+def test_base_index_stats_n_vectors(spark, sf_dir):
+    """Base-index n_vectors stats == the count_if it replaced."""
+    root = qs.ivf_base_index_path(spark, sf_dir)
+    n = qs._vectors(spark, sf_dir)
+    expect = n.filter(
+        (F.col("vec_id") % qs.UP_MOD) != qs.UP_REM
+    ).count()
+    assert qs.index_stat(root, "n_vectors") == expect
+    # missing keys fall back to the default, never raise
+    assert qs.index_stat(root, "no_such_key", default=-1) == -1
+
+
+def test_vectors_memo_same_frame_and_count(spark, sf_dir):
+    """_vectors returns the memoized frame on repeat calls (one cache
+    entry per corpus) and its footer count matches a real count job."""
+    a = qs._vectors(spark, sf_dir)
+    b = qs._vectors(spark, sf_dir)
+    assert a is b
+    assert a._corpus_rows == a.count()

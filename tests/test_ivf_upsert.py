@@ -15,10 +15,14 @@ Contracts:
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from spark_dns_spark.plans import q_kmeans as km
 from spark_dns_spark.plans import q_similarity as qs
+
+DIM = km.DIM
 
 
 def _rows(df):
@@ -77,3 +81,68 @@ def test_upsert_split_is_total(spark, sf_dir):
     }
     assert flags <= {(0, False), (1, True)}
     assert (1, True) in flags, "delta batch empty at this sf — vacuous"
+
+
+@pytest.fixture(scope="module")
+def tiny_q(spark):
+    rng = np.random.default_rng(7)
+    vecs = rng.integers(-1000, 1000, size=(17, DIM)).tolist()
+    return spark.createDataFrame(
+        [tuple([i] + [int(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id bigint, " + ", ".join(f"q{i} bigint" for i in range(DIM)),
+    )
+
+
+def _emission_counts(df):
+    rows = df.groupBy("vec_id").count().collect()
+    return {r["vec_id"]: r["count"] for r in rows}
+
+
+@pytest.mark.parametrize("kc", [3, 8])
+@pytest.mark.parametrize("kk", [1, 2, 5])
+def test_nearest_cells_emits_exactly_min_kk_kc(spark, tiny_q, kc, kk):
+    # duplicate centroids included on purpose: ties must NOT dedup —
+    # the rebalance total0 arithmetic counts min(kk, kc) rows/vector
+    rng = np.random.default_rng(kc)
+    cents = rng.integers(-1000, 1000, size=(kc, DIM)).tolist()
+    cents[-1] = list(cents[0])  # a tied pair of centroids
+    expect = min(kk, kc)
+    for meta in (False, True):
+        out = qs._nearest_cells(tiny_q, cents, kk, meta=meta)
+        counts = _emission_counts(out)
+        assert len(counts) == 17
+        assert set(counts.values()) == {expect}, (
+            f"kc={kc} kk={kk} meta={meta}: per-vector emission "
+            f"{set(counts.values())} != {{{expect}}} — the rebalance "
+            "posting-conservation arithmetic depends on this"
+        )
+
+
+def test_nearest_cells_meta_slots_are_dense(spark, tiny_q):
+    # rn must be exactly 1..k per vector (the demote-slot join keys on
+    # it); d2 must be non-decreasing in rn (nearness order)
+    cents = np.random.default_rng(3).integers(
+        -1000, 1000, size=(6, DIM)
+    ).tolist()
+    out = qs._nearest_cells(tiny_q, cents, 4, meta=True).collect()
+    by_vec: dict = {}
+    for r in out:
+        by_vec.setdefault(r["vec_id"], []).append((r["rn"], r["d2"]))
+    for slots in by_vec.values():
+        slots.sort()
+        assert [s[0] for s in slots] == [1, 2, 3, 4]
+        d2s = [s[1] for s in slots]
+        assert d2s == sorted(d2s)
+
+
+def test_cand_pin_knob(spark, monkeypatch):
+    # the r16 candidate-dedup parallelism pin: REPARTITION_BY_NUM when
+    # enabled (AQE's coalesce rule skips it), a no-op under
+    # SPARK_DNS_CAND_PIN=0 (the in-process A/B knob)
+    df = spark.range(100).selectExpr("id as a", "id as b")
+    monkeypatch.delenv("SPARK_DNS_CAND_PIN", raising=False)
+    pinned = qs._pin(df, "a", "b")
+    plan = pinned._jdf.queryExecution().toString()
+    assert "REPARTITION_BY_NUM" in plan
+    monkeypatch.setenv("SPARK_DNS_CAND_PIN", "0")
+    assert qs._pin(df, "a", "b") is df

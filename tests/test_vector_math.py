@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_dns_spark.operators import similarity as sim
+from spark_dns_spark.plans import q_similarity as qs
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -151,3 +152,20 @@ def test_lsh_params_scale_rule():
         assert nb == t[rpb - sim.RPB_MIN]
         last_rpb = rpb
     assert sim.lsh_params(2**20, t)[0] == 16  # 1M vectors -> 2^16 buckets/band
+
+
+def test_attach_strategies_bit_identical(spark, sf_dir):
+    """strategy='gather' (Arrow matrix fold) and the broadcast-join
+    codegen dot must agree bit-for-bit — the r15 per-site strategy
+    choice is a physical decision only."""
+    n = qs._vectors(spark, sf_dir)
+    pairs = (
+        n.select(F.col("vec_id").alias("id_a"))
+        .crossJoin(n.select(F.col("vec_id").alias("id_b")))
+        .filter((F.col("id_a") < F.col("id_b")) & (F.col("id_b") % 11 == 0))
+    )
+    g = sim.attach_cosine(pairs, n, "id_a", "id_b", strategy="gather")
+    j = sim.attach_cosine(pairs, n, "id_a", "id_b")
+    gm = {(r["id_a"], r["id_b"]): r["cosine"] for r in g.collect()}
+    jm = {(r["id_a"], r["id_b"]): r["cosine"] for r in j.collect()}
+    assert gm and gm == jm  # exact double equality per pair

@@ -80,8 +80,13 @@ def run_level(cpus: int, sf_dir: str) -> dict:
         [sys.executable, "-c", code], env=env, capture_output=True, text=True,
     )
     sys.stderr.write(proc.stderr[-2000:])
-    line = proc.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode or not lines:
+        raise RuntimeError(
+            f"{cpus}-core child failed (exit {proc.returncode}, "
+            f"{len(lines)} stdout lines); stderr tail:\n{proc.stderr[-2000:]}"
+        )
+    return json.loads(lines[-1])
 
 
 def main() -> int:

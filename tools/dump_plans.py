@@ -1,16 +1,15 @@
-"""Dump ``explain("formatted")`` for catalog queries to files.
-
-The optimization rounds require committed before/after physical plans
-for every query a round touches (``plans/rN/<query>_{before,after}.txt``)
-so the judge can check plan claims without running Spark.
+"""Dump ``explain("formatted")`` for catalog queries to files
+(``<out>/<query>_{before,after}.txt``), to diff the physical plans a
+change touches.  The dumps are not committed: rerun this tool at any
+commit to regenerate them.
 
 Usage:
-    python tools/dump_plans.py --out plans/r15 --suffix after \
+    python tools/dump_plans.py --out .scratch/plans --suffix after \
         [--sf /root/testdata/sf0.1] query [query ...]
 
 The "before" side of a diff is produced by running this same tool from a
-git worktree checked out at the pre-change commit with ``--suffix
-before`` and the SAME --out directory (pass an absolute path).
+checkout of the pre-change commit (e.g. a ``git archive`` export) with
+``--suffix before`` and the SAME --out directory (pass an absolute path).
 """
 
 from __future__ import annotations
