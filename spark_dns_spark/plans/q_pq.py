@@ -607,17 +607,8 @@ def similarity_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).join(F.broadcast(queries), "query_id"),
         _l2("qq", "qv"),
         RECALL_K,
-    ).withColumn("hit", F.lit(1))
-    return (
-        exact.join(adc, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"))
-        .select(
-            "query_id",
-            "hits",
-            (F.col("hits") * F.lit(10000 // RECALL_K)).alias("recall_e4"),
-        )
     )
+    return qs._recall(exact, adc, RECALL_K)
 
 
 def _topk_by(pairs: DataFrame, dist: F.Column, k: int) -> DataFrame:
@@ -709,68 +700,40 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The composed serve as an unwrapped builder (the recall metric
-    composes it without re-entering the catalog wrapper, which would
-    release the outer query's caches — the _ivf_topk precedent)."""
-    n = qs._vectors(spark, sf_dir)
-    ivf_root = qs.ivf_index_path(spark, sf_dir)
+    f = qs._serve_front(spark, sf_dir, qs.ivf_index_path(spark, sf_dir))
     pq_root = pq_index_path(spark, sf_dir)
-    cents = qs.load_cents(spark, f"{ivf_root}/cents")
     books = _load_books(spark, pq_root)
-    if not cents or not any(books):
-        return qs._scored_topk(
-            n,
-            n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            ),
-        )
-    asg = spark.read.parquet(f"{ivf_root}/asg").withColumnRenamed(
-        "vec_id", "neighbor_id"
+    if f is None or not any(books):
+        return qs._empty_topk(qs._vectors(spark, sf_dir))
+    shortlist = _adc_shortlist(
+        spark, pq_root, books, f.qq, qs._candidates(f.probes, f.postings),
+        max(IVFPQ_SHORT_MIN, f.nrows // IVFPQ_SHORT_DIV),
     )
-    qq = km.quantize(
-        n.filter(F.col("vec_id") % qs.QMOD == 0).select("vec_id", "v")
-    )
-    # footer-metadata row count (qs._nrows), not a count() job: the
-    # composed serve paid TWO full-scan driver jobs per invocation
-    # (nprobe + shortlist sizing) that every other serve already reads
-    # from the _corpus_rows attribute (guide §5, the r15 pattern)
-    nv = qs._nrows(n)
-    probes = qs._nearest_cells(qq, cents, qs.nprobe(nv)).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    # Pin the candidate-dedup exchange's post-shuffle side to full
-    # shuffle parallelism (r16, the range-serve fix): the stage after
-    # it decodes PQ codes and evaluates the interpreted L2 fold on
-    # every candidate — compute-heavy, byte-light, so AQE's byte-based
-    # coalescing collapsed it to a single task (profiled two ~0.5 s
-    # 1-task stages per recall run).  REPARTITION_BY_NUM is exempt
-    # from the coalesce rule and satisfies the distinct's clustering
-    # requirement (no extra exchange).
-    icand = (
-        qs._pin(
-            probes.join(asg, "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id"),
-            "query_id", "neighbor_id",
-        )
-        .distinct()
-    )
-    # ADC stage: decode survivors from their stored codes (map-only),
-    # rank by integer L2 against the (broadcast) quantized queries.
+    # exact re-rank: raw vectors are read ONLY for the shortlist pairs
+    return qs._scored_topk(f.n, shortlist)
+
+
+def _adc_shortlist(
+    spark: SparkSession,
+    pq_root: str,
+    books: list[list[list[int]]],
+    qq: DataFrame,
+    icand: DataFrame,
+    k: int,
+) -> DataFrame:
+    """The ADC stage of both IVF-PQ serves: decode the candidates'
+    stored codes (map-only) and keep each query's ``k`` nearest by
+    integer L2 against the broadcast quantized queries ``qq`` (the
+    probe stage's own sample — one query scan, not two)."""
     recon = _recon_from_codes(spark, pq_root, books)
-    # Reuse the probe stage's quantized queries (km.quantize == the
-    # array form value-for-value) — one query scan, not two.
     queries = qq.select(
         F.col("vec_id").alias("query_id"), km._qarr().alias("qq")
     )
-    shortlist_k = max(IVFPQ_SHORT_MIN, nv // IVFPQ_SHORT_DIV)
-    cand = _topk_by(
+    return _topk_by(
         icand.join(recon, "neighbor_id").join(F.broadcast(queries), "query_id"),
         _l2("qq", "rv"),
-        shortlist_k,
+        k,
     )
-    # Exact re-rank: raw vectors are read ONLY for the shortlist pairs.
-    return qs._scored_topk(n, cand)
 
 
 @register(
@@ -809,21 +772,8 @@ GROUP BY bfk.query_id
     tags=("similarity", "ivf", "pq", "metric"),
 )
 def similarity_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf = qs._bf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    iv = (
-        _ivfpq_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        bf.join(iv, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"))
-        .select(
-            "query_id",
-            "hits",
-            (F.col("hits") * F.lit(10000 // qs.K)).alias("recall_e4"),
-        )
+    return qs._recall(
+        qs._bf_topk(spark, sf_dir), _ivfpq_topk(spark, sf_dir), qs.K
     )
 
 
@@ -922,10 +872,6 @@ def similarity_pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unwrapped upsert builder (the _ivfpq_topk precedent): callable
-    from other catalog queries without re-entering the registration
-    wrapper, whose release_all_caches must not run mid-query
-    (ADVICE r9)."""
     root = pq_base_index_path(spark, sf_dir)
     base = spark.read.parquet(f"{root}/codes").withColumn(
         "is_new", F.lit(0)
@@ -1128,55 +1074,28 @@ _FILT_IVFPQ_SQL = _FILT_IVFPQ_CHAIN + qs._scored_topk_sql("")
 
 
 def _filtered_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rare-label filtered IVF-PQ serve (unwrapped; the recall metric
-    composes it): :func:`_ivfpq_topk` with the rare-label prune at the
-    postings join and the selectivity-scaled probe widening of
-    ``_filtered_rare_topk`` — the four-stage filtered production
-    serve: label prune -> probe stored cells -> ADC-rank stored codes
-    -> exact re-rank."""
+    """:func:`_ivfpq_topk` over the rare-label pruned, widened
+    candidates of ``qs._filtered_icand`` — label prune -> probe stored
+    cells -> ADC-rank stored codes -> exact re-rank."""
     parts = qs._filtered_icand(spark, sf_dir)
-    books = _load_books(spark, pq_index_path(spark, sf_dir))
-    n = parts["n"]
-    if parts["icand"] is None or not any(books):
-        return qs._scored_topk(
-            n,
-            n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            ),
-        )
-    return qs._scored_topk(
-        n, _ivfpq_shortlist_from_icand(spark, sf_dir, parts, books)
-    )
-
-
-def _ivfpq_shortlist_from_icand(
-    spark: SparkSession, sf_dir: str, parts: dict, books
-) -> DataFrame:
-    """The ADC half of the filtered IVF-PQ serve over a prebuilt
-    ``_filtered_icand`` dict: decode stored codes, rank the eligible
-    candidates by approximate L2, keep the pool-scaled shortlist.
-    Split out (r15) so the fused retrieval pipeline shares ONE icand
-    subplan between its two serves instead of building both serves
-    from scratch."""
     pq_root = pq_index_path(spark, sf_dir)
-    # label prune BEFORE the ADC stage: two skinny (id, label) joins —
-    # at scale the label rides the postings table, so no decoded or
-    # raw vector is ever read for an ineligible candidate
-    recon = _recon_from_codes(spark, pq_root, books)
-    queries = parts["qq"].select(
-        F.col("vec_id").alias("query_id"), km._qarr().alias("qq")
+    books = _load_books(spark, pq_root)
+    if parts is None or not any(books):
+        return qs._empty_topk(qs._vectors(spark, sf_dir))
+    f = parts[0]
+    return qs._scored_topk(
+        f.n, _filtered_shortlist(spark, pq_root, books, parts)
     )
-    shortlist_k = max(
-        IVFPQ_SHORT_MIN,
-        parts["n_count"] // (IVFPQ_SHORT_DIV * parts["n_labels"]),
-    )
-    return _topk_by(
-        parts["icand"]
-        .join(recon, "neighbor_id")
-        .join(F.broadcast(queries), "query_id"),
-        _l2("qq", "rv"),
-        shortlist_k,
-    )
+
+
+def _filtered_shortlist(
+    spark: SparkSession, pq_root: str, books, parts: tuple
+) -> DataFrame:
+    """ADC shortlist of a ``_filtered_icand`` result, scaled to the
+    ELIGIBLE pool (see _FLCNT_CTE), not the corpus."""
+    f, icand, n_labels = parts
+    k = max(IVFPQ_SHORT_MIN, f.nrows // (IVFPQ_SHORT_DIV * n_labels))
+    return _adc_shortlist(spark, pq_root, books, f.qq, icand, k)
 
 
 @register(
@@ -1250,50 +1169,10 @@ GROUP BY b.query_id
 def similarity_filtered_ivfpq_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    n = qs._vectors(spark, sf_dir)
-    rlab = n.select(
-        "vec_id", (F.col("vec_id") % qs.RARE_MOD).alias("rlabel")
+    truth = qs._label_truth(
+        qs._vectors(spark, sf_dir), F.col("vec_id") % qs.RARE_MOD
     )
-    qn = n.filter(F.col("vec_id") % qs.QMOD == 0)
-    cand = (
-        qn.select(F.col("vec_id").alias("query_id"))
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("rlabel").alias("q_label"),
-            ),
-            "query_id",
-        )
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("rlabel").alias("n_label"),
-            ),
-            F.col("n_label") == F.col("q_label"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    truth = qs._scored_topk(n, cand).select("query_id", "neighbor_id")
-    served = (
-        _filtered_ivfpq_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        truth.join(served, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("truth_n"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-        )
-        .select(
-            "query_id",
-            "truth_n",
-            "hits",
-            F.expr("hits * 10000 div truth_n").alias("recall_e4"),
-        )
-    )
+    return qs._recall(truth, _filtered_ivfpq_topk(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1393,22 +1272,18 @@ def retrieval_filtered_fused_mmr(
     # dedups the icand chain between the two serve branches, so the
     # checkpoint only added its own blocking job.
     parts = qs._filtered_icand(spark, sf_dir)
-    n = parts["n"]
-    books = _load_books(spark, pq_index_path(spark, sf_dir))
-    if parts["icand"] is None or not any(books):
-        empty = qs._scored_topk(
-            n,
-            n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            ),
-        )
-        r1 = r2 = empty.select("query_id", "neighbor_id", "rank")
+    n = qs._vectors(spark, sf_dir)
+    pq_root = pq_index_path(spark, sf_dir)
+    books = _load_books(spark, pq_root)
+    if parts is None or not any(books):
+        r1 = r2 = qs._empty_topk(n).select("query_id", "neighbor_id", "rank")
     else:
-        r1 = qs._scored_topk(n, parts["icand"]).select(
+        _, icand, _ = parts
+        r1 = qs._scored_topk(n, icand).select(
             "query_id", "neighbor_id", "rank"
         )
         r2 = qs._scored_topk(
-            n, _ivfpq_shortlist_from_icand(spark, sf_dir, parts, books)
+            n, _filtered_shortlist(spark, pq_root, books, parts)
         ).select("query_id", "neighbor_id", "rank")
     allr = r1.unionByName(r2).select(
         "query_id",

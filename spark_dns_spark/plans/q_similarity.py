@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import math
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -101,10 +102,14 @@ def _pin_npart(spark: SparkSession) -> int:
     r15 BM25 failure mode).  Scale-aware: the pin follows
     spark.sql.shuffle.partitions, so on a cluster it is whatever the
     submit conf says, and 0 (via SPARK_DNS_CAND_PIN=0) disables every
-    pin — the in-process A/B knob."""
+    pin — the in-process A/B knob.  An unset key falls back to the
+    session's cores (``conf.get`` returns the caller's default then)."""
     if os.environ.get("SPARK_DNS_CAND_PIN", "") == "0":
         return 0
-    return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return int(spark.conf.get(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    ))
 
 
 def _pin(df: DataFrame, *cols: str) -> DataFrame:
@@ -287,6 +292,42 @@ def _scored_topk(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= K)
         .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+def _empty_topk(n: DataFrame) -> DataFrame:
+    """The schema-stable empty top-k an empty index serves."""
+    return _scored_topk(
+        n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
+            "query_id", F.col("query_id").alias("neighbor_id")
+        )
+    )
+
+
+def _recall(
+    truth: DataFrame, served: DataFrame, k: int | None = None
+) -> DataFrame:
+    """Per-query recall of ``served`` against ``truth`` (both carry
+    query_id, neighbor_id): hits and ``recall_e4`` = hits·10⁴ / k, or,
+    with ``k=None``, / the query's truth count (emitted as truth_n)."""
+    hit = served.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
+    per_q = (
+        truth.select("query_id", "neighbor_id")
+        .join(hit, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+    )
+    hits = F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits")
+    if k is not None:
+        return per_q.agg(hits).select(
+            "query_id",
+            "hits",
+            (F.col("hits") * F.lit(10000 // k)).alias("recall_e4"),
+        )
+    return per_q.agg(F.count(F.lit(1)).alias("truth_n"), hits).select(
+        "query_id",
+        "truth_n",
+        "hits",
+        F.expr("hits * 10000 div truth_n").alias("recall_e4"),
     )
 
 
@@ -559,6 +600,82 @@ def _nearest_cells(
     )
 
 
+# --- the IVF serve pipeline --------------------------------------------------
+# Every IVF top-k serve composes the same three steps: _serve_front
+# (probe the stored centroids), _candidates (postings join + dedup) and
+# _scored_topk (exact re-rank).  Serves that other queries compose are
+# plain ``_name`` builders: a catalog wrapper would run
+# release_all_caches mid-query.
+
+
+class _Front(NamedTuple):
+    """What an IVF serve reads before its candidate join."""
+
+    n: DataFrame  #: the :func:`_vectors` frame
+    cents: object  #: :func:`load_cents` state
+    qq: DataFrame  #: quantized query sample (vec_id + qv columns)
+    probes: DataFrame  #: (query_id, cell)
+    postings: DataFrame  #: the stored postings (vec_id, cell, ...)
+    nrows: int  #: corpus row count
+
+
+def _serve_front(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str,
+    widen: int = 1,
+    keep: F.Column | None = None,
+) -> _Front | None:
+    """Map the query sample (vec_id % QMOD == 0) to its
+    ``widen · nprobe(n)`` nearest stored centroids of the index at
+    ``root`` (the one K-row centroid read; the probe is a map).  ``keep``
+    is a vec_id predicate applied to both the queries and the postings
+    (tombstones).  None on an empty index."""
+    n = _vectors(spark, sf_dir)
+    cents = load_cents(spark, f"{root}/cents")
+    if not cents:
+        return None
+    postings = spark.read.parquet(f"{root}/asg")
+    q = n.filter(F.col("vec_id") % QMOD == 0)
+    if keep is not None:
+        postings, q = postings.filter(keep), q.filter(keep)
+    qq = km.quantize(q.select("vec_id", "v"))
+    nrows = _nrows(n)
+    probes = _nearest_cells(
+        qq, cents, widen * nprobe(nrows)
+    ).withColumnRenamed("vec_id", "query_id")
+    return _Front(n, cents, qq, probes, postings, nrows)
+
+
+def _candidates(
+    probes: DataFrame, postings: DataFrame, widen: int = 1
+) -> DataFrame:
+    """Distinct (query_id, neighbor_id) pairs that share a probed cell,
+    the query itself excluded: a pair meets once per shared cell, so
+    both engines dedup before the exact re-rank.
+
+    The dedup exchange is pinned (:func:`_pin`) for plain nprobe probes
+    only (r16, measured both ways).  Plain: a pair repeats at most
+    IVF_ASSIGN times, and the stage after the dedup evaluates the
+    unrolled cosine / L2 fold on every candidate — compute-heavy,
+    byte-light — which AQE's byte-based coalescing collapsed to 1-10
+    tasks; the pin (1.2-1.75x) replaces the exchange, it adds none.
+    Widened (``widen`` > 1: FILTER_WIDEN / filter_widen probes): the
+    duplicate factor grows with the probe count, and the distinct's
+    map-side partial aggregate below a coalesced exchange beats
+    shuffling every duplicate through a pinned one (pinned 2.03-2.86 s
+    vs unpinned 1.84-2.52 s) — the LSH band joins' reason."""
+    nb = postings.withColumnRenamed("vec_id", "neighbor_id")
+    cand = (
+        probes.join(nb, "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+    )
+    if widen == 1:
+        cand = _pin(cand, "query_id", "neighbor_id")
+    return cand.distinct()
+
+
 #: process-lifetime cache of built IVF indexes — train-once/serve-many,
 #: like a production ANN service (VERDICT-r7 item 5); lock + source-
 #: mtime keyed via feeds.cached_index_path (ADVICE r8).
@@ -823,43 +940,13 @@ _IVF_DELETE_SQL = (
 def similarity_ivf_delete_serve(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    n = _vectors(spark, sf_dir)
-    root = ivf_index_path(spark, sf_dir)
-    cents = load_cents(spark, f"{root}/cents")
-    if not cents:
-        return _scored_topk(
-            n,
-            n.select(F.col("vec_id").alias("query_id"))
-            .limit(0)
-            .select("query_id", F.col("query_id").alias("neighbor_id")),
-        )
-    asg = (
-        spark.read.parquet(f"{root}/asg")
-        .filter((F.col("vec_id") % UP_MOD) != DEL_REM)
-        .select(F.col("vec_id").alias("neighbor_id"), "cell")
+    f = _serve_front(
+        spark, sf_dir, ivf_index_path(spark, sf_dir),
+        keep=(F.col("vec_id") % UP_MOD) != DEL_REM,
     )
-    qq = km.quantize(
-        n.filter(
-            ((F.col("vec_id") % QMOD) == 0)
-            & ((F.col("vec_id") % UP_MOD) != DEL_REM)
-        ).select("vec_id", "v")
-    )
-    probes = _nearest_cells(qq, cents, nprobe(_nrows(n))).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    # plain-nprobe candidate stream (dup factor <= IVF_ASSIGN): pinned
-    # like _ivf_topk (r16) — the post-dedup stage computes the unrolled
-    # cosine per candidate.
-    cand = (
-        _pin(
-            probes.join(asg, "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id"),
-            "query_id", "neighbor_id",
-        )
-        .distinct()
-    )
-    return _scored_topk(n, cand)
+    if f is None:
+        return _empty_topk(_vectors(spark, sf_dir))
+    return _scored_topk(f.n, _candidates(f.probes, f.postings))
 
 
 @register(
@@ -884,40 +971,10 @@ def _ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serve top-k from the stored index: collect the K centroid rows
     (the one whitelisted K-row driver collect), map queries to their
     nprobe(n) cells in pure codegen, join the postings parquet."""
-    n = _vectors(spark, sf_dir)
-    root = ivf_index_path(spark, sf_dir)
-    cents = load_cents(spark, f"{root}/cents")
-    if not cents:
-        return _scored_topk(
-            n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-        )
-    asg = spark.read.parquet(f"{root}/asg").withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    qq = km.quantize(
-        n.filter(F.col("vec_id") % QMOD == 0).select("vec_id", "v")
-    )
-    probes = _nearest_cells(qq, cents, nprobe(_nrows(n))).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    # a (query, neighbor) pair can meet in up to IVF_ASSIGN shared
-    # cells — dedup before the exact re-rank (both engines).  The
-    # dedup exchange is pinned REPARTITION_BY_NUM (r16, the range-serve
-    # fix): the post-shuffle stage evaluates the unrolled cosine dot on
-    # every candidate — compute-heavy, byte-light, which AQE's
-    # byte-based coalescing otherwise collapses to 1-2 tasks.
-    cand = (
-        _pin(
-            probes.join(asg, "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id"),
-            "query_id", "neighbor_id",
-        )
-        .distinct()
-    )
-    return _scored_topk(n, cand)
+    f = _serve_front(spark, sf_dir, ivf_index_path(spark, sf_dir))
+    if f is None:
+        return _empty_topk(_vectors(spark, sf_dir))
+    return _scored_topk(f.n, _candidates(f.probes, f.postings))
 
 
 def _ivf_topk_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -928,25 +985,14 @@ def _ivf_topk_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = km.quantize(n.select("vec_id", "v")).persist()
     cents = km.seed_cents(q, ivf_kc(q.count()))
     if not cents:
-        return _scored_topk(
-            n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-        )
+        return _empty_topk(n)
     cents = km.lloyd_train(q, cents, IVF_ITERS)
-    asg = _nearest_cells(q, cents, IVF_ASSIGN).withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
     probes = _nearest_cells(
         q.filter(F.col("vec_id") % QMOD == 0), cents, nprobe(q.count())
     ).withColumnRenamed("vec_id", "query_id")
-    cand = (
-        probes.join(asg, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
+    return _scored_topk(
+        n, _candidates(probes, _nearest_cells(q, cents, IVF_ASSIGN))
     )
-    return _scored_topk(n, cand)
 
 
 @register(
@@ -1558,22 +1604,7 @@ GROUP BY bf.query_id
     tags=("similarity", "lsh", "metric"),
 )
 def similarity_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf = _bf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    lsh = (
-        _lsh_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        bf.join(lsh, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"))
-        .select(
-            "query_id",
-            "hits",
-            (F.col("hits") * F.lit(10000 // K)).alias("recall_e4"),
-        )
-    )
+    return _recall(_bf_topk(spark, sf_dir), _lsh_topk(spark, sf_dir), K)
 
 
 @register(
@@ -1601,22 +1632,7 @@ GROUP BY bf.query_id
     tags=("similarity", "ivf", "metric"),
 )
 def similarity_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bf = _bf_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf = (
-        _ivf_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        bf.join(ivf, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"))
-        .select(
-            "query_id",
-            "hits",
-            (F.col("hits") * F.lit(10000 // K)).alias("recall_e4"),
-        )
-    )
+    return _recall(_bf_topk(spark, sf_dir), _ivf_topk(spark, sf_dir), K)
 
 
 # --- IVF-served range (radius) search ---------------------------------------
@@ -1701,11 +1717,7 @@ RANGE_SHUFFLE_MAX = 50_000
 def _range_pairs(
     spark: SparkSession, sf_dir: str, strategy: str | None = None
 ) -> DataFrame:
-    """The range serve as an unwrapped builder (the recall metric
-    composes it without re-entering the catalog wrapper, which would
-    release the outer query's caches — the _ivf_topk precedent).
-
-    ``strategy``: None = size-dispatch on :data:`RANGE_SHUFFLE_MAX`;
+    """``strategy``: None = size-dispatch on :data:`RANGE_SHUFFLE_MAX`;
     'shuffle' / 'instage' force a path (tests)."""
     n = _vectors(spark, sf_dir)
     root = ivf_index_path(spark, sf_dir)
@@ -1723,17 +1735,8 @@ def _range_pairs(
     # pushes the post-join stage out of whole-stage codegen, while the
     # single interpreted fold stays cheap relative to the join)
     if strategy == "shuffle":
-        # Pin the dedup exchange's post-shuffle side to full shuffle
-        # parallelism (r16): the stage after it evaluates the
-        # interpreted d2 fold on EVERY candidate pair — compute-heavy
-        # but byte-light, so AQE's byte-based coalescing collapsed it
-        # to ~10 of 32 tasks (profiled 2.25 s in one 10-task stage at
-        # sf0.1; the exact failure mode the r15 BM25 probe pinned).  A
-        # user repartition(N, cols) has shuffle origin
-        # REPARTITION_BY_NUM, which AQE's coalesce rule is defined to
-        # skip, and HashPartitioning(id_a, id_b) satisfies the
-        # distinct's clustering requirement, so this REPLACES the
-        # ENSURE_REQUIREMENTS exchange instead of adding one.
+        # the symmetric twin of _candidates (plain nprobe probes, so
+        # pinned by the same rule)
         cand = (
             _pin(
                 probes.join(asg, "cell")
@@ -1882,22 +1885,8 @@ def similarity_range_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p")
         )
         .select("p.query_id", "p.neighbor_id")
-        .withColumn("hit", F.lit(1))
     )
-    return (
-        truth.join(served, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("truth_n"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-        )
-        .select(
-            "query_id",
-            "truth_n",
-            "hits",
-            F.expr("hits * 10000 div truth_n").alias("recall_e4"),
-        )
-    )
+    return _recall(truth, served)
 
 
 @register(
@@ -2032,6 +2021,49 @@ def filter_widen(n_labels: int) -> int:
         ),
     )
 
+
+def _label_prune(cand: DataFrame, n: DataFrame, label: F.Column) -> DataFrame:
+    """Keep the candidate pairs whose two ends share ``label`` (a
+    column over ``n``: ``label`` or ``vec_id % RARE_MOD``) — two skinny
+    (id, label) joins BEFORE any vector is read for the re-rank; at
+    scale the label rides the postings table."""
+    return (
+        cand.join(
+            n.select(
+                F.col("vec_id").alias("query_id"), label.alias("q_label")
+            ),
+            "query_id",
+        )
+        .join(
+            n.select(
+                F.col("vec_id").alias("neighbor_id"), label.alias("n_label")
+            ),
+            "neighbor_id",
+        )
+        .filter(F.col("n_label") == F.col("q_label"))
+        .select("query_id", "neighbor_id")
+    )
+
+
+def _label_truth(n: DataFrame, label: F.Column) -> DataFrame:
+    """Exact same-``label`` brute top-K over the query sample — the
+    ground truth of the filtered recalls (the whitelisted bounded
+    class: |Q| is corpus/QMOD)."""
+    cand = (
+        n.filter(F.col("vec_id") % QMOD == 0)
+        .select(F.col("vec_id").alias("query_id"), label.alias("q_label"))
+        .join(
+            n.select(
+                F.col("vec_id").alias("neighbor_id"), label.alias("n_label")
+            ),
+            F.col("n_label") == F.col("q_label"),
+        )
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id")
+    )
+    return _scored_topk(n, cand)
+
+
 _FILTERED_SQL = (
     _IVF_CTE
     + f"""
@@ -2078,53 +2110,12 @@ def similarity_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unwrapped filtered-serve builder (the _ivf_topk precedent):
-    the recall metric composes it without re-entering the catalog
-    wrapper, whose release_all_caches must not run mid-query."""
-    n = _vectors(spark, sf_dir)
     root = ivf_index_path(spark, sf_dir)
-    cents = load_cents(spark, f"{root}/cents")
-    if not cents:
-        return _scored_topk(
-            n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-        )
-    asg = spark.read.parquet(f"{root}/asg").withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    qq = km.quantize(
-        n.filter(F.col("vec_id") % QMOD == 0).select("vec_id", "v")
-    )
-    probes = _nearest_cells(
-        qq, cents, FILTER_WIDEN * nprobe(_nrows(n))
-    ).withColumnRenamed("vec_id", "query_id")
-    lab = n.select("vec_id", "label")
-    cand = (
-        probes.join(asg, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-        # label prune BEFORE the exact re-rank: two skinny (id, label)
-        # joins; the label dim would ride the postings table at scale
-        .join(
-            lab.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("label").alias("q_label"),
-            ),
-            "query_id",
-        )
-        .join(
-            lab.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("label").alias("n_label"),
-            ),
-            "neighbor_id",
-        )
-        .filter(F.col("n_label") == F.col("q_label"))
-        .select("query_id", "neighbor_id")
-    )
-    return _scored_topk(n, cand)
+    f = _serve_front(spark, sf_dir, root, FILTER_WIDEN)
+    if f is None:
+        return _empty_topk(_vectors(spark, sf_dir))
+    cand = _candidates(f.probes, f.postings, FILTER_WIDEN)
+    return _scored_topk(f.n, _label_prune(cand, f.n, F.col("label")))
 
 
 #: Rebalance cap: 9/8 of the EXPECTED postings-per-cell — tight enough
@@ -2717,43 +2708,8 @@ GROUP BY b.query_id
     tags=("similarity", "ivf", "filtered", "metric"),
 )
 def similarity_filtered_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _vectors(spark, sf_dir)
-    lab = n.select("vec_id", "label")
-    qn = n.filter(F.col("vec_id") % QMOD == 0)
-    # exact same-label brute top-k over the bounded query sample (the
-    # whitelisted ground-truth class: |Q| is corpus/QMOD)
-    cand = (
-        qn.select(F.col("vec_id").alias("query_id"), "label")
-        .join(
-            lab.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("label").alias("n_label"),
-            ),
-            F.col("n_label") == F.col("label"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    truth = _scored_topk(n, cand).select("query_id", "neighbor_id")
-    served = (
-        _filtered_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        truth.join(served, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("truth_n"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-        )
-        .select(
-            "query_id",
-            "truth_n",
-            "hits",
-            F.expr("hits * 10000 div truth_n").alias("recall_e4"),
-        )
-    )
+    truth = _label_truth(_vectors(spark, sf_dir), F.col("label"))
+    return _recall(truth, _filtered_topk(spark, sf_dir))
 
 
 # --- rare-label filtered tier (r11, VERDICT r10 item 7) ----------------------
@@ -2798,88 +2754,37 @@ _RARE_SQL = (
 )
 
 
-def _filtered_icand(spark: SparkSession, sf_dir: str):
+def _filtered_icand(
+    spark: SparkSession, sf_dir: str
+) -> tuple[_Front, DataFrame, int] | None:
     """The SHARED front half of both rare-filtered serves — widened
-    probes over the stored index, postings join, rare-label prune —
-    returned as a dict so composing queries build it ONCE.
+    probes over the stored index, postings join, rare-label prune:
+    (front, icand, measured label count), or None on an empty index.
 
     The oracle of the fused retrieval pipeline (VERDICT r13 item 1)
-    already shares the probes/icand CTEs between its two serves; the
-    Spark side built them twice through two independent function calls
-    whose per-call Python UDF instances made the subplans
-    non-canonical, so not even exchange reuse could dedup them (r15
-    profile: each serve ~3 s of build+exec, paid 2x by the fused
-    entry).  Returns ``icand=None`` on an empty index (callers keep
-    their empty-result branches).  Keys: n, icand, qq, n_labels,
-    n_count."""
-    n = _vectors(spark, sf_dir)
-    root = ivf_index_path(spark, sf_dir)
-    cents = load_cents(spark, f"{root}/cents")
-    if not cents:
-        return {"n": n, "icand": None, "qq": None,
-                "n_labels": 1, "n_count": _nrows(n)}
+    shares the probes/icand CTEs between its two serves; the Spark side
+    shares this ONE subplan the same way (two independent builds made
+    non-canonical per-call Python UDF instances, so not even exchange
+    reuse could dedup them — r15 profile: ~3 s paid twice)."""
     n_labels = rare_label_count(spark, sf_dir)
-    n_count = _nrows(n)
-    asg = spark.read.parquet(f"{root}/asg").withColumnRenamed(
-        "vec_id", "neighbor_id"
-    )
-    qq = km.quantize(
-        n.filter(F.col("vec_id") % QMOD == 0).select("vec_id", "v")
-    )
-    probes = _nearest_cells(
-        qq, cents, filter_widen(n_labels) * nprobe(n_count)
-    ).withColumnRenamed("vec_id", "query_id")
-    rlab = n.select(
-        "vec_id", (F.col("vec_id") % RARE_MOD).alias("rlabel")
-    )
-    # NO parallelism pin here (r16 negative result, in-process knob
-    # A/B over all four filtered serves/recalls: pinned 2.03-2.86 s vs
-    # unpinned 1.84-2.52 s): the WIDENED probes (filter_widen x nprobe)
-    # raise the candidate duplicate factor, so the distinct's map-side
-    # partial aggregate below an AQE-coalesced exchange beats shuffling
-    # every duplicate through a pinned one — the same reason the LSH
-    # band joins stay unpinned, unlike the plain-nprobe IVF serves.
-    icand = (
-        probes.join(asg, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("rlabel").alias("q_label"),
-            ),
-            "query_id",
-        )
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("rlabel").alias("n_label"),
-            ),
-            "neighbor_id",
-        )
-        .filter(F.col("n_label") == F.col("q_label"))
-        .select("query_id", "neighbor_id")
-    )
-    return {"n": n, "icand": icand, "qq": qq,
-            "n_labels": n_labels, "n_count": n_count}
+    widen = filter_widen(n_labels)
+    f = _serve_front(spark, sf_dir, ivf_index_path(spark, sf_dir), widen)
+    if f is None:
+        return None
+    cand = _candidates(f.probes, f.postings, widen)
+    icand = _label_prune(cand, f.n, F.col("vec_id") % RARE_MOD)
+    return f, icand, n_labels
 
 
 def _filtered_rare_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rare-label filtered serve (unwrapped; the recall metric composes
-    it): identical to :func:`_filtered_topk` except the filter is the
-    ~1%-selectivity derived ``vec_id % RARE_MOD`` label and the probe
-    widening is :func:`filter_widen` of the MEASURED distinct label
-    count instead of the base constant."""
+    """:func:`_filtered_topk` with the ~1%-selectivity derived
+    ``vec_id % RARE_MOD`` label and :func:`filter_widen` of the MEASURED
+    label count as the probe widening."""
     parts = _filtered_icand(spark, sf_dir)
-    n = parts["n"]
-    if parts["icand"] is None:
-        return _scored_topk(
-            n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-        )
-    return _scored_topk(n, parts["icand"])
+    if parts is None:
+        return _empty_topk(_vectors(spark, sf_dir))
+    f, icand, _ = parts
+    return _scored_topk(f.n, icand)
 
 
 @register(
@@ -2950,50 +2855,8 @@ GROUP BY b.query_id
 def similarity_filtered_rare_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    n = _vectors(spark, sf_dir)
-    rlab = n.select(
-        "vec_id", (F.col("vec_id") % RARE_MOD).alias("rlabel")
-    )
-    qn = n.filter(F.col("vec_id") % QMOD == 0)
-    cand = (
-        qn.select(F.col("vec_id").alias("query_id"))
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("rlabel").alias("q_label"),
-            ),
-            "query_id",
-        )
-        .join(
-            rlab.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("rlabel").alias("n_label"),
-            ),
-            F.col("n_label") == F.col("q_label"),
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-    )
-    truth = _scored_topk(n, cand).select("query_id", "neighbor_id")
-    served = (
-        _filtered_rare_topk(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        truth.join(served, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("truth_n"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("hits"),
-        )
-        .select(
-            "query_id",
-            "truth_n",
-            "hits",
-            F.expr("hits * 10000 div truth_n").alias("recall_e4"),
-        )
-    )
+    truth = _label_truth(_vectors(spark, sf_dir), F.col("vec_id") % RARE_MOD)
+    return _recall(truth, _filtered_rare_topk(spark, sf_dir))
 
 
 # --- hybrid retrieval: reciprocal-rank fusion (r11 continuation) -------------
@@ -3397,48 +3260,25 @@ FROM srv
 def similarity_upsert_serve_fresh(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    n = _vectors(spark, sf_dir)
-    root = ivf_base_index_path(spark, sf_dir)
-    cents = load_cents(spark, f"{root}/cents")
-    flag = (
-        (F.col("neighbor_id") % UP_MOD == UP_REM).cast("int")
-        .alias("neighbor_is_new")
-    )
-    if not cents:
-        return _scored_topk(
-            n, n.select(F.col("vec_id").alias("query_id")).limit(0).select(
-                "query_id", F.col("query_id").alias("neighbor_id")
-            )
-        ).select("query_id", "neighbor_id", "cosine", "rank", flag)
-    # merged postings = stored base postings + encode-only delta (the
-    # similarity_ivf_upsert algebra): batch cost proportional to |delta|
-    base = spark.read.parquet(f"{root}/asg").select("vec_id", "cell")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    qd = km.quantize(
-        e.filter((F.col("vec_id") % UP_MOD) == UP_REM).select("vec_id", "v")
-    )
-    merged = base.unionByName(
-        _nearest_cells(qd, cents, IVF_ASSIGN)
-    ).withColumnRenamed("vec_id", "neighbor_id")
-    qq = km.quantize(
-        n.filter(F.col("vec_id") % QMOD == 0).select("vec_id", "v")
-    )
-    probes = _nearest_cells(qq, cents, nprobe(_nrows(n))).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    # plain-nprobe candidate stream (dup factor <= IVF_ASSIGN): pinned
-    # like _ivf_topk (r16).
-    cand = (
-        _pin(
-            probes.join(merged, "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id"),
-            "query_id", "neighbor_id",
+    f = _serve_front(spark, sf_dir, ivf_base_index_path(spark, sf_dir))
+    if f is None:
+        top = _empty_topk(_vectors(spark, sf_dir))
+    else:
+        # merged postings = stored base postings + encode-only delta (the
+        # similarity_ivf_upsert algebra): batch cost proportional to |delta|
+        e = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
-        .distinct()
-    )
-    return _scored_topk(n, cand).select(
-        "query_id", "neighbor_id", "cosine", "rank", flag
+        qd = km.quantize(
+            e.filter((F.col("vec_id") % UP_MOD) == UP_REM)
+            .select("vec_id", "v")
+        )
+        merged = f.postings.select("vec_id", "cell").unionByName(
+            _nearest_cells(qd, f.cents, IVF_ASSIGN)
+        )
+        top = _scored_topk(f.n, _candidates(f.probes, merged))
+    flag = (F.col("neighbor_id") % UP_MOD == UP_REM).cast("int")
+    return top.select(
+        "query_id", "neighbor_id", "cosine", "rank",
+        flag.alias("neighbor_is_new"),
     )

@@ -64,7 +64,10 @@ from pyspark.sql.types import (
 
 from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions
 from spark_dns_spark.sources.transport import ZoneTransport, make_transport
-from spark_dns_spark.sources.zonestore import ZoneNotFoundError
+from spark_dns_spark.sources.zonestore import (
+    ZoneNotFoundError,
+    write_json_atomic,
+)
 
 #: Read schema — 6 columns, alphabetical (bean-encoder order parity,
 #: DnsRecordToRowConverter.java:20, SURVEY.md §1.3).
@@ -251,7 +254,8 @@ class DnsBatchReader(DataSourceReader):
 class ProgressLog:
     """T3/O2/O3 — the reference's own progress files beside Spark's
     checkpoint (ProgressSerDe.java:18-21): one JSON file per committed
-    batch, newest ``max-kept-commits`` retained."""
+    batch, newest ``max-kept-commits`` retained, each written atomically
+    (a crash mid-commit leaves the previous batch as the newest)."""
 
     def __init__(self, path: str, max_kept: int):
         self.path = path
@@ -270,11 +274,9 @@ class ProgressLog:
             return {z: int(s) for z, s in json.load(f).items()}
 
     def commit(self, serials: dict[str, int]) -> int:
-        os.makedirs(self.path, exist_ok=True)
         ids = self._ids()
         batch_id = (ids[-1] + 1) if ids else 0  # O3: max+1
-        with open(os.path.join(self.path, str(batch_id)), "w") as f:
-            json.dump(serials, f)
+        write_json_atomic(os.path.join(self.path, str(batch_id)), serials)
         for old in ids[: max(0, len(ids) + 1 - self.max_kept)]:  # O2 retention
             os.unlink(os.path.join(self.path, str(old)))
         return batch_id
@@ -328,9 +330,7 @@ class DnsStreamReader(DataSourceStreamReader):
         return clock
 
     def _save_clock(self) -> None:
-        os.makedirs(self.progress.path, exist_ok=True)
-        with open(self._admission_path(), "w") as f:
-            json.dump(self._clock, f)
+        write_json_atomic(self._admission_path(), self._clock)
 
     def _zones(self) -> list[str]:
         return self.opts.zones or make_transport(self.opts).zones()

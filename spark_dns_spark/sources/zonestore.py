@@ -53,6 +53,24 @@ class TransferResult:
     rows: list[tuple[str, str, str]]
 
 
+def write_json_atomic(path: str, data) -> None:
+    """Write ``data`` as JSON to ``path`` through a temp file in the same
+    directory and ``os.replace``: a reader, or a restart after a crash
+    mid-write, sees the old document or the new one, never a torn one.
+    The temp name (``tmp*.tmp``) is never all digits, so it can't pose
+    as a progress-log batch file."""
+    d = os.path.dirname(path) or "."
+    os.makedirs(d, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=d, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(data, f)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
 def _safe(zone: str) -> str:
     return re.sub(r"[^A-Za-z0-9._-]", "_", zone.rstrip(".")) or "_root_"
 
@@ -72,15 +90,7 @@ class ZoneStore:
             raise ZoneNotFoundError(f"zone not served: {zone}")
 
     def _write_atomic(self, zone: str, data: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".tmp")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(data, f)
-            os.replace(tmp, self._path(zone))
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+        write_json_atomic(self._path(zone), data)
 
     # -- provisioning -------------------------------------------------
     def create_zone(
@@ -140,9 +150,7 @@ class ZoneStore:
     def set_server(self, port: int = 53) -> None:
         """Declare the port this store's simulated server listens on
         (default: accept any port, for stores that predate the file)."""
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._server_meta_path(), "w") as f:
-            json.dump({"port": int(port)}, f)
+        write_json_atomic(self._server_meta_path(), {"port": int(port)})
 
     def set_transfer_delay(self, zone: str, seconds: float) -> None:
         """Fault injection: simulated transfer RTT for one zone."""

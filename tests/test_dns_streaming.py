@@ -7,6 +7,9 @@ run → update → resume sequence).
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -117,6 +120,26 @@ def test_progress_log_commit_and_retention(tmp_path):
         log.commit({"example.acme.": i + 1})
     assert log.latest() == {"example.acme.": 5}
     assert log._ids() == [2, 3, 4]  # 0 and 1 retired
+
+
+def test_progress_commit_killed_mid_write(tmp_path, monkeypatch):
+    # a process dying inside commit() must not leave a torn newest
+    # progress file: restart (latest() -> initialOffset()) would raise
+    # JSONDecodeError and the stream could never restart
+    path = tmp_path / "progress"
+    log = ProgressLog(str(path), max_kept=3)
+    log.commit({"example.acme.": 1})
+
+    def torn_dump(obj, f, *args, **kwargs):
+        f.write('{"example.acme.": 2, "other.')
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="killed mid-write"):
+        log.commit({"example.acme.": 2, "other.acme.": 1})
+    monkeypatch.undo()
+    assert log.latest() == {"example.acme.": 1}
+    assert os.listdir(path) == ["0"]  # no partial file, digit-named or not
 
 
 def test_progress_written_on_commit(spark, store, tmp_path):

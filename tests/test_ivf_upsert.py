@@ -15,6 +15,8 @@ Contracts:
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -146,3 +148,32 @@ def test_cand_pin_knob(spark, monkeypatch):
     assert "REPARTITION_BY_NUM" in plan
     monkeypatch.setenv("SPARK_DNS_CAND_PIN", "0")
     assert qs._pin(df, "a", "b") is df
+
+
+@pytest.mark.parametrize(
+    "name, pinned",
+    [
+        ("similarity_topk_ivf", True),
+        ("similarity_ivf_delete_serve", True),
+        ("similarity_upsert_serve_fresh", True),
+        ("similarity_topk_ivfpq", True),
+        ("similarity_topk_filtered", False),
+        ("similarity_topk_filtered_rare", False),
+        ("similarity_topk_lsh", False),
+    ],
+)
+def test_cand_pin_placement(spark, sf_dir, monkeypatch, name, pinned):
+    # the one pin rule (qs._candidates): plain nprobe probes pin the
+    # candidate-dedup exchange, widened filtered probes and LSH bands
+    # don't.  (The round-robin spread() of the cached vectors is a
+    # REPARTITION_BY_NUM exchange too, hence the hash-key match.)
+    import __spark_entry__ as entrymod
+
+    monkeypatch.delenv("SPARK_DNS_CAND_PIN", raising=False)
+    df = entrymod.queries()[name](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    pin = re.compile(
+        r"hashpartitioning\(query_id#\d+L?, neighbor_id#\d+L?, \d+\), "
+        r"REPARTITION_BY_NUM"
+    )
+    assert bool(pin.search(plan)) == pinned

@@ -24,13 +24,18 @@ import pytest
 from tools.plan_audit import BASELINE_PATH, SKIP, drift, plan_stats
 
 #: join-heavy shapes spanning the tiers most likely to drift (TPC-H
-#: multi-join, IVF serve, dedup LSH, graph iteration, changelog argmax)
+#: multi-join, IVF serve — pinned, widened-unpinned, cross-module and
+#: the shared filtered-candidate subplan —, dedup LSH, graph iteration,
+#: changelog argmax)
 SAMPLE = [
     "tpch_q5_local_supplier_volume",
     "tpch_q21_waiting_suppliers",
     "tpch_q17_small_quantity_revenue",
     "revenue_by_nation",
     "similarity_topk_ivf",
+    "similarity_topk_filtered_rare",
+    "similarity_topk_ivfpq",
+    "retrieval_filtered_fused_mmr",
     "dedup_minhash_lsh",
     "graph_pagerank_transitions",
     "changelog_latest_wins",

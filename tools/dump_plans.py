@@ -10,6 +10,17 @@ Usage:
 The "before" side of a diff is produced by running this same tool from a
 checkout of the pre-change commit (e.g. a ``git archive`` export) with
 ``--suffix before`` and the SAME --out directory (pass an absolute path).
+
+Plan-diff recipe.  A cold first run (index disk cache empty for that
+code) shows the ``InMemoryRelation``s the index build materialized, so
+only WARM runs compare: run each side twice and diff the second dumps.
+Two warm runs of one commit are byte-identical after normalizing
+expression ids, exchange / plan ids and the index-cache slot digest
+(which changes with the code key)::
+
+    sed -E 's/#[0-9]+L?/#N/g; s/\\[id=[0-9]+\\]/[id=N]/g;
+            s/plan_id=[0-9]+/plan_id=N/g;
+            s#(spark_graft_idx/[a-z_]+/)[0-9a-f]+#\\1D#g'
 """
 
 from __future__ import annotations
