@@ -125,9 +125,10 @@ def dedup_updates_for_send(
     ts_col: str = "timestamp",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """The sink's pre-send pipeline (global version): normalize fqdn,
-    derive zone, then latest-wins dedup on the reference's identity key
-    ``(action, fqdn, ip)`` (dao/DnsRecord.java:10-20).
+    """The DataFrame form of the sink's latest-wins, which tests and the
+    benchmark replay compare against (``send_updates`` does not run it):
+    normalize fqdn, derive zone, then latest-wins dedup on the
+    reference's identity key ``(action, fqdn, ip)`` (dao/DnsRecord.java:10-20).
     """
     out = group_updates_by_zone(normalize_updates(df))
     return latest_wins(out, ["action", "fqdn", "ip"], ts_col=ts_col, tiebreak=tiebreak)

@@ -7,10 +7,10 @@ spark/write/DnsPartitionHandler.java:30-44 + DnsUpdate.java:46-81):
 1. validate (P4 — throw on first invalid row, reference behavior);
 2. normalize fqdn: lower + trailing dot (F1/F6);
 3. group by zone derived from fqdn (A1/F5);
-4. latest-wins dedup on (action, fqdn, ip) by timestamp (A2) —
-   per-partition here, exactly like the reference; *global* dedup is
-   the caller's job via :func:`send_updates` (one ``repartition(zone)``
-   + window — the documented improvement, SURVEY.md §4 shuffle row);
+4. latest-wins dedup on (action, fqdn, ip) by (timestamp, event_id)
+   (A2) — per-partition, exactly like the reference; :func:`send_updates`
+   makes it global with one ``repartition(zone)`` (the documented
+   improvement, SURVEY.md §4 shuffle row);
 5. one store update message per zone; unknown zone ⇒ raise (rcode!=0,
    DnsUpdate.java:76-80) unless ``ignore-failures``.
 
@@ -93,7 +93,7 @@ class DnsUpdateWriter(DataSourceWriter):
     def write(self, iterator: Iterator[Row]) -> DnsWriteCommit:
         # Buffer-per-partition mirrors the reference's per-partition
         # grouping (whole transfer buffered, DnsZoneTransferHandler.java:25-26);
-        # callers bound partition size via repartition upstream.
+        # under send_updates a task buffers whole zones.
         def _eid(row: Row) -> int:
             # optional feed sequence number: breaks equal-timestamp ties
             # deterministically (the documented latest-wins contract
@@ -178,16 +178,10 @@ class DnsUpdateWriter(DataSourceWriter):
         pass  # DNS updates are not transactional in the reference either
 
 
-class DnsUpdateStreamWriter(DataSourceStreamWriter):
+class DnsUpdateStreamWriter(DnsUpdateWriter, DataSourceStreamWriter):
     """S10 — the reference's streaming sink is a hand-rolled foreachBatch
     (DnsStreamingBatchHandler.java:11-30); here it is the same writer
     body invoked per micro-batch."""
-
-    def __init__(self, options: dict):
-        self._delegate = DnsUpdateWriter(options)
-
-    def write(self, iterator: Iterator[Row]) -> DnsWriteCommit:
-        return self._delegate.write(iterator)
 
     def commit(self, messages, batchId: int) -> None:
         pass
@@ -226,24 +220,17 @@ class DnsUpdateDataSource(DataSource):
         return DnsUpdateStreamWriter(self._resolved_options())
 
 
-def send_updates(df: DataFrame, store: str, global_dedup: bool = True, **options):
-    """Driver-side write helper: the reference's full sink pipeline with
-    the *global* dedup fix (SURVEY.md §4): normalize → zone-tag →
-    window dedup across ALL partitions → repartition by zone (one
-    update message per zone per partition) → ``dns_update`` write.
+def send_updates(df: DataFrame, store: str, **options):
+    """Driver-side write helper with the *global* dedup fix (SURVEY.md
+    §4): normalize fqdn → zone-tag → ``repartition(zone)`` → ``dns_update``
+    write.  The zone is a function of the normalized fqdn, so every
+    ``(action, fqdn, ip)`` key lands in one task and the writer's
+    per-partition latest-wins is already global.
     """
-    from pyspark.sql import functions as F
+    from spark_dns_spark.operators import changelog as cl
 
-    from spark_dns_spark.operators.changelog import dedup_updates_for_send
-
-    out = df
-    if global_dedup:
-        # event_id (when the feed carries one) pins equal-timestamp ties
-        # globally, matching the writer's per-partition apply order.
-        tiebreak = ["event_id"] if "event_id" in df.columns else []
-        out = dedup_updates_for_send(df, ts_col="timestamp", tiebreak=tiebreak)
-        out = out.repartition(F.col("zone")).drop("zone")
-    writer = out.write.format("dns_update").option("store", store)
+    out = cl.group_updates_by_zone(cl.normalize_updates(df)).repartition("zone")
+    writer = out.drop("zone").write.format("dns_update").option("store", store)
     for k, v in options.items():
         writer = writer.option(k.replace("_", "-"), str(v))
     writer.mode("append").save()

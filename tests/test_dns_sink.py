@@ -91,6 +91,8 @@ def test_send_updates_latest_wins_same_identity(spark, store):
     rows = [
         ("IXFR_ADD", "H.example.acme.", "2.2.2.2", base, 1),  # F1: case folds
         ("IXFR_ADD", "h.example.acme", "2.2.2.2", base + dt.timedelta(minutes=5), 1),
+        # zone labels fold too: the zone is derived after lower-casing
+        ("IXFR_ADD", "H.EXAMPLE.ACME", "2.2.2.2", base + dt.timedelta(minutes=1), 1),
     ]
     df = spark.createDataFrame(rows, SCHEMA).repartition(2)
     register_all(spark)
@@ -98,6 +100,66 @@ def test_send_updates_latest_wins_same_identity(spark, store):
     assert store.resolve("example.acme.", "h.example.acme.") == ["2.2.2.2"]
     # exactly one history entry per deduped identity (serial bumped once)
     assert store.serial("example.acme.") == 2
+
+
+def test_send_updates_zone_from_folded_fqdn(spark, store):
+    """Every spelling of one name shares a write task: the zone is derived
+    after lower-casing, so the writer's per-task latest-wins stays global
+    even when no shuffle partitions are coalesced."""
+    base = dt.datetime(2024, 1, 1)
+    names = ["h.example.acme.", "H.EXAMPLE.ACME", "h.Example.Acme", "H.example.ACME."]
+    rows = [
+        ("IXFR_ADD", n, "5.5.5.5", base + dt.timedelta(minutes=i), 1)
+        for i, n in enumerate(names)
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    register_all(spark)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        send_updates(df, store.root)
+    finally:
+        spark.conf.set(key, prev)
+    assert store.resolve("example.acme.", "h.example.acme.") == ["5.5.5.5"]
+    assert store.serial("example.acme.") == 2
+
+
+@pytest.mark.parametrize(
+    "older",
+    [
+        ("IXFR_ADD", "v.example.acme", "4.4.4.4", dt.datetime(2024, 1, 1), 0),
+        ("IXFR_ADD", "v.example.acme", "4.4.4.4", None, 1),
+    ],
+    ids=["ttl", "null-timestamp"],
+)
+def test_send_updates_invalid_shadowed_row_raises(spark, store, older):
+    """P4 throws on the first invalid row (DnsPartitionHandler.java:69-77),
+    even when a newer duplicate of its key would win the dedup."""
+    newer = ("IXFR_ADD", "v.example.acme", "4.4.4.4", dt.datetime(2024, 1, 2), 1)
+    df = spark.createDataFrame([older, newer], SCHEMA)
+    register_all(spark)
+    with pytest.raises(Exception, match="invalid update"):
+        send_updates(df, store.root)
+
+
+def test_send_updates_single_exchange(spark, store, monkeypatch):
+    """The send path shuffles once, on the zone: no window and no
+    exchange on the (action, fqdn, ip) key before the write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sent = []
+    monkeypatch.setattr(DataFrameWriter, "save", lambda w, *a, **k: sent.append(w._df))
+    df = spark.createDataFrame(_update_rows(), SCHEMA)
+    send_updates(df, store.root)
+    (out,) = sent
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
+    assert "hashpartitioning(zone#" in exchanges[0], plan
+    assert "REPARTITION_BY_COL" in exchanges[0], plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    assert "Window" not in plan, plan
 
 
 def test_write_to_unknown_zone_raises(spark, store):
