@@ -36,20 +36,25 @@ bench:
 gate-repro:
 	python tools/gate_repro.py --json GATE_REPRO_$(ROUND).json
 
-# 10x-growth evidence: generate sf1, oracle-check the heavy tiers,
-# time the top slowest for scaling ratios (VERDICT r7 item 2)
+# 10x-growth evidence: generate sf1, time the heavy tier at sf0.1 and
+# sf1 for scaling ratios (VERDICT r7 item 2)
 sf1:
 	python tools/make_sf1.py
-	python tools/bench_sf1.py --json SCALE_SF1_$(ROUND).json
+	python tools/scale_probe.py --sf 0.1,1 --json SCALE_SF1_$(ROUND).json
 
 # cross-engine gate for the heavy tiers at sf1 (100x the driver's
-# sf0.01 scale); query list lives in tools/bench_sf1.py
+# sf0.01 scale); query list lives in tools/scale_probe.py
 sf1-oracle:
 	python tools/make_sf1.py
 	python tools/check_oracle.py --json ORACLE_SF1_$(ROUND).json \
-	  .scratch/sf1 $$(python -c "from tools.bench_sf1 import ORACLE_QUERIES; print(' '.join(ORACLE_QUERIES))")
+	  .scratch/sf1 $$(python -c "from tools.scale_probe import ORACLE_QUERIES; print(' '.join(ORACLE_QUERIES))")
 
 # 100x-growth evidence (VERDICT r14 item 4): generate sf10 (2.2 GB)
 # and time the top-10 heavies against squared work-growth bounds
 sf10:
-	python tools/bench_sf10.py --json SCALE_SF10_$(ROUND).json
+	python tools/scale_probe.py --sf 0.1,10 --json SCALE_SF10_$(ROUND).json
+
+# core-count evidence (VERDICT r15 item 7): the heavies at sf1 on 32
+# and 8 cores; a ratio near 1 names a serial bottleneck
+scale-cores:
+	python tools/scale_probe.py --sf 1 --cpus 32,8 --json SCALE_CORES_$(ROUND).json

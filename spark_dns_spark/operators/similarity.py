@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -368,16 +367,9 @@ def band_keys_arrow(
 #: Broadcast envelope for :func:`attach_cosine`: vectors above this
 #: count go through the bucketed pair-join instead of a driver collect +
 #: executor broadcast.  200k x (64 doubles + ids) ~ 100 MB — the same
-#: order as Spark's own broadcast-join comfort zone.  Env-overridable so
-#: the join path can be forced for equivalence tests / oracle runs.
-MAX_BROADCAST_VECTORS = int(os.environ.get("SPARK_DNS_MAX_BROADCAST_VECTORS", "200000"))
-
-#: Force one attach_cosine strategy process-wide ("gather" / "join") —
-#: an A/B measurement knob for bench and tests; empty = per-call-site.
-#: Read PER CALL inside attach_cosine (ADVICE r15: an import-time read
-#: silently ignored env changes made after import, unlike the other
-#: runtime overrides); the per-call getenv is one dict lookup.
-_ATTACH_FORCE_VAR = "SPARK_DNS_ATTACH_FORCE"
+#: order as Spark's own broadcast-join comfort zone.  Callers force the
+#: join path through ``max_broadcast_rows=``.
+MAX_BROADCAST_VECTORS = 200_000
 
 
 def attach_cosine(
@@ -431,9 +423,6 @@ def attach_cosine(
     """
     if max_broadcast_rows is None:
         max_broadcast_rows = MAX_BROADCAST_VECTORS
-    force = os.environ.get(_ATTACH_FORCE_VAR, "")
-    if force:
-        strategy = force  # A/B override (bench/tests only)
     n_rows = getattr(n_df, "_corpus_rows", None)
     if n_rows is None:
         n_rows = n_df.count()

@@ -14,8 +14,6 @@ min-per-source — an independent formulation of the same components.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -247,7 +245,8 @@ FROM members GROUP BY island
 """,
     doc="sweep-line span clustering of the sorted-neighborhood matches "
     "— the SCALABLE clustering for rank-local pair graphs, replacing "
-    "the rejected CC-over-SNM composition (SURVEY continuation 9): "
+    "the rejected CC-over-SNM composition (one Θ(n)-diameter chain "
+    "component, so min-label propagation advanced one hop per round): "
     "each matched pair is a rank interval [rnk_a, rnk_b]; clusters = "
     "maximal unions of OVERLAPPING intervals, found in one ordered "
     "pass (running-max break detection + prefix-sum numbering, both "
@@ -389,9 +388,9 @@ def star_contraction_components(
     """Connected components by alternating large-star / small-star
     contraction — O(log² n) rounds on ANY graph shape, including the
     Θ(n)-diameter chains where one-hop min-label propagation (even
-    with pointer halving) degrades to Θ(diameter) rounds (SURVEY
-    round-6 continuation 9 measured exactly that).  Each round is two
-    groupBy+join passes over the CURRENT edge set, which only
+    with pointer halving) degrades to Θ(diameter) rounds (measured on
+    the sorted-neighborhood pair graph: one hop per round).  Each round
+    is two groupBy+join passes over the CURRENT edge set, which only
     shrinks toward one star per component; fixpoint = edge set
     unchanged.  Returns (doc_id, label) with label = component min,
     for every endpoint of the ORIGINAL edges."""
@@ -762,10 +761,7 @@ LPA_ITERS = 3
 #: ~50-100 B/row which is rebuilt EVERY round and bypasses
 #: autoBroadcastJoinThreshold, so 1M rows ~ 50-100 MB per round is the
 #: honest comfort zone on an 8 g local heap (ADVICE r15).
-#: Env-overridable to force either path.
-LPA_BCAST_MAX = int(
-    os.environ.get("SPARK_DNS_LPA_BCAST_MAX", "1000000")
-)
+LPA_BCAST_MAX = 1_000_000
 
 
 def _lpa_rounds_sql(rounds: int) -> str:

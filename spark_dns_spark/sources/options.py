@@ -46,6 +46,19 @@ CONF_KEYS = (
     "xfr", "serial", "ignore-failures", "fail-zones",
     "max-kept-commits", "max-changes-per-batch", "transport",
 )
+#: Every key a reader or writer accepts: the conf-backed keys plus the
+#: streaming reader's progress-log location.  Anything else is a typo
+#: (``zone`` for ``zones``) or a stale keyword, and is rejected rather
+#: than silently ignored.
+KNOWN_KEYS = frozenset(
+    CONF_KEYS
+    + (
+        "progress-dir",
+        # Spark forwards writeStream's checkpointLocation to the
+        # streaming writer's options (lower-cased); the sink ignores it.
+        "checkpointlocation",
+    )
+)
 
 
 def conf_snapshot(spark) -> dict:
@@ -96,6 +109,13 @@ class DnsOptions:
 
     @classmethod
     def parse(cls, options: dict) -> "DnsOptions":
+        # Spark lower-cases datasource option keys, so compare lower-cased.
+        unknown = sorted(k for k in options if k.lower() not in KNOWN_KEYS)
+        if unknown:
+            raise OptionError(
+                f"unknown option: {unknown[0]} (known: "
+                f"{', '.join(sorted(KNOWN_KEYS))})"
+            )
         store = _get(options, "store") or _get(options, "server")
         if not store:
             raise OptionError(

@@ -5,6 +5,7 @@ the in-process zone store instead of a Bind9 container (SURVEY.md §5).
 
 from __future__ import annotations
 
+import datetime as dt
 from types import SimpleNamespace
 
 import pytest
@@ -210,6 +211,23 @@ def test_option_validation_errors(spark, store):
     ).max_changes_per_batch == 7
     with pytest.raises(OptionError):
         DnsSourceOptions.parse({"store": "/x", "max-changes-per-batch": "-1"})
+    # unknown keys are rejected, not ignored: a one-letter typo would
+    # otherwise read the whole store, and an underscore spelling would
+    # silently keep the default
+    with pytest.raises(OptionError, match="unknown option: zone "):
+        DnsSourceOptions.parse({"store": "/x", "zone": "a."})
+    with pytest.raises(OptionError, match="unknown option: ignore_failures"):
+        DnsSourceOptions.parse({"store": "/x", "ignore_failures": "true"})
+    # a keyword send_updates no longer has reaches the writer and fails
+    from spark_dns_spark.sources.dns_sink import send_updates
+
+    rows = spark.createDataFrame(
+        [("IXFR_ADD", "h.example.acme.", "1.2.3.4", dt.datetime(2024, 1, 1), 60)],
+        "action string, fqdn string, ip string, timestamp timestamp, ttl int",
+    )
+    register_all(spark)
+    with pytest.raises(Exception, match="unknown option: global-dedup"):
+        send_updates(rows, store.root, global_dedup=False)
     # the sink parses the same common options: transport checked,
     # ignore-failures default false
     from spark_dns_spark.sources.dns_sink import DnsUpdateWriter

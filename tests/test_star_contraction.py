@@ -1,8 +1,8 @@
 """Star-contraction connected components: union-find equivalence on
 random graphs, and the property that motivated it — fast convergence
 on the Θ(n)-diameter chain graphs where one-hop min-label propagation
-(even with pointer halving) measurably stalls (SURVEY round-6
-continuation 9)."""
+(even with pointer halving) measurably stalls: it advances one graph
+hop per round."""
 
 from __future__ import annotations
 
