@@ -20,8 +20,9 @@ def register_all(spark) -> None:
     etc. first, then call ``register_all`` (re-calling replaces the
     registration with a fresh snapshot); explicit datasource options
     always win over the snapshot.  The session's ``defaultParallelism``
-    rides along the same way: the ``dns`` reader plans at most that
-    many partitions.
+    rides along the same way: it caps the ``dns`` reader's partitions,
+    which are otherwise one per ``BIN_BYTES`` of zone-file bytes
+    (transport.py), so a small store is read by one task.
     """
     from spark_dns_spark.sources.options import conf_snapshot
 

@@ -5,14 +5,16 @@ Architecture vs the reference (a Java DSv1 RelationProvider +
 hand-rolled RDD, spark/read/*.java): same observable semantics, Spark-4
 native mechanics —
 
-- zones packed into at most ``defaultParallelism`` input partitions
-  (S3, adapted): the zone stays the unit of work — never split, each
+- zones packed into input partitions sized by transfer work (S3,
+  adapted): the zone stays the unit of work — never split, each
   transferred serially, the protocol constraint (README.md:5-6) — but
   the bin is the unit of scheduling.  The reference's one partition per
   zone (DnsZoneRDD.java:40-53) would cost one Python worker task per
-  zone, whose fixed start-up cost is far above a zone's transfer;
-  bins are filled largest zone first (LPT) by the transport's size
-  hint (:func:`pack_transfers`);
+  zone, whose fixed start-up cost is far above a zone's transfer.  A
+  scan plans ``min(#zones, parallelism, ceil(Σ size_hint /
+  BIN_BYTES))`` bins (at least one), so a small store is read by one
+  task; bins are filled largest zone first (LPT) by the transport's
+  size hint (:func:`pack_transfers`);
 - fixed 6-column schema in bean-encoder alphabetical order
   (``action, fqdn, ip, organization, timestamp, zone`` —
   DnsRecordToRowConverter.java:20-29); user-supplied schema is ignored
@@ -63,7 +65,11 @@ from pyspark.sql.types import (
 )
 
 from spark_dns_spark.sources.options import XFR_AXFR, DnsSourceOptions
-from spark_dns_spark.sources.transport import ZoneTransport, make_transport
+from spark_dns_spark.sources.transport import (
+    BIN_BYTES,
+    ZoneTransport,
+    make_transport,
+)
 from spark_dns_spark.sources.zonestore import (
     ZoneNotFoundError,
     write_json_atomic,
@@ -151,10 +157,14 @@ def pack_transfers(
 
 
 def _plan(
-    transport: ZoneTransport, transfers: list[ZoneTransfer], nbins: int
+    transport: ZoneTransport, transfers: list[ZoneTransfer], parallelism: int
 ) -> list[DnsZonePartition]:
+    """Pack ``transfers`` into one bin per :data:`BIN_BYTES` of transfer
+    work (at least one), but no more bins than ``parallelism`` or than
+    zones; every partition carries one planning-time timestamp."""
     ts = _now_us()
     sizes = {t.zone: transport.size_hint(t.zone) for t in transfers}
+    nbins = min(parallelism, max(1, -(-sum(sizes.values()) // BIN_BYTES)))
     return [
         DnsZonePartition(transfers=b, batch_ts_us=ts)
         for b in pack_transfers(transfers, sizes, nbins)
@@ -206,6 +216,7 @@ def _now_us() -> int:
 
 
 def _parallelism(n: int | None) -> int:
+    # The most read partitions a scan plans, however much work it has.
     # Unregistered readers (no session to ask) fall back to this
     # host's cores — the parallelism of a local[*] session.
     return n or os.cpu_count() or 1
@@ -335,6 +346,22 @@ class DnsStreamReader(DataSourceStreamReader):
     def _zones(self) -> list[str]:
         return self.opts.zones or make_transport(self.opts).zones()
 
+    def _polled_serials(self) -> dict[str, int]:
+        # Without a `zones` option one listing serves both the zone
+        # names and their serials, each zone file parsed once: Spark
+        # re-polls an idle stream every few milliseconds.
+        transport = make_transport(self.opts)
+        if not self.opts.zones:
+            return transport.serials()
+        out = {}
+        for z in self.opts.zones:
+            try:
+                out[z] = int(transport.serial(z))
+            except ZoneNotFoundError:
+                if not self.opts.ignore_failures:
+                    raise
+        return out
+
     def initialOffset(self) -> dict:
         # T4 restart recovery: newest progress file wins over the
         # `serial` option (DnsSourceRelationProvider.java:57-64).
@@ -353,22 +380,15 @@ class DnsStreamReader(DataSourceStreamReader):
         # landing in one giant batch; the transfer itself is
         # serial-bounded by to_serial, and progress/commit semantics
         # are unchanged (exactly-once across the split batches).
-        transport = make_transport(self.opts)
         cap = self.opts.max_changes_per_batch
         if cap and self._clock is None:
             self._clock = self._seed_clock()
-        out = {}
-        for z in self._zones():
-            try:
-                target = int(transport.serial(z))
-            except ZoneNotFoundError:
-                if not self.opts.ignore_failures:
-                    raise
-                continue
-            if cap:
-                target = min(target, int(self._clock.get(z, 0)) + cap)
-            out[z] = target
+        out = self._polled_serials()
         if cap:
+            out = {
+                z: min(s, int(self._clock.get(z, 0)) + cap)
+                for z, s in out.items()
+            }
             self._clock = {**self._clock, **out}
             self._save_clock()
         return out
@@ -422,8 +442,9 @@ class DnsDataSource(DataSource):
     #: a worker process with no session — the snapshot rides on the
     #: cloudpickled class instead.
     _conf_defaults: dict = {}
-    #: the session's ``defaultParallelism``, baked in the same way: the
-    #: most read partitions a scan plans (None ⇒ this host's cores).
+    #: the session's ``defaultParallelism``, baked in the same way: a
+    #: cap on the read partitions a scan plans, which are sized by
+    #: transfer work (None ⇒ this host's cores).
     _default_parallelism: int | None = None
 
     def _resolved_options(self) -> dict:

@@ -51,6 +51,13 @@ from spark_dns_spark.sources.zonestore import (
 #: only when ``rtype == 'SOA'`` (0 otherwise).
 WireRR = tuple[str, str, str, int]
 
+#: Transfer work, in zone-file bytes, that one ``dns`` read partition
+#: should carry.  A read task's fixed cost is about 0.3 s of Python CPU
+#: plus 0.16 s of JVM CPU, and a transfer parses 50-70 MB of zone file
+#: per core-second, so a bin under ~16 MiB costs more to schedule than
+#: to transfer (4-vCPU host, per-op CPU split by process).
+BIN_BYTES = 16 << 20
+
 
 class ZoneTransport(ABC):
     """What the ``dns`` source needs from any transfer mechanism."""
@@ -75,11 +82,15 @@ class ZoneTransport(ABC):
         """Raise ``OSError`` for unreachable-server conditions that can
         be detected before/without a transfer (may be a no-op)."""
 
+    def serials(self) -> dict[str, int]:
+        """``{zone: serial}`` of every zone :meth:`zones` lists."""
+        return {z: self.serial(z) for z in self.zones()}
+
     def size_hint(self, zone: str) -> int:
-        """Relative cost of transferring ``zone``, for packing zones
-        into read partitions.  Unknown by default: every zone weighs
-        the same."""
-        return 1
+        """Bytes of transfer work for ``zone``, for sizing and packing
+        read partitions.  Unknown by default: a zone fills a bin
+        (:data:`BIN_BYTES`), so every zone weighs the same."""
+        return BIN_BYTES
 
 
 class FileStoreTransport(ZoneTransport):
@@ -95,6 +106,9 @@ class FileStoreTransport(ZoneTransport):
 
     def serial(self, zone: str) -> int:
         return self.store.serial(zone)
+
+    def serials(self) -> dict[str, int]:
+        return self.store.serials()
 
     def transfer(
         self, zone: str, from_serial: int, to_serial: int | None, axfr: bool

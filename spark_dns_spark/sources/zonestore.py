@@ -175,13 +175,20 @@ class ZoneStore:
             )
 
     def zones(self) -> list[str]:
+        return list(self.serials())
+
+    def serials(self) -> dict[str, int]:
+        """``{zone: serial}`` of every served zone, from one directory
+        listing that parses each zone file once (an idle stream polls
+        this every trigger)."""
         if not os.path.isdir(self.root):
-            return []
-        out = []
+            return {}
+        out = {}
         for fn in sorted(os.listdir(self.root)):
             if fn.endswith(".zone.json"):
                 with open(os.path.join(self.root, fn)) as f:
-                    out.append(json.load(f)["zone"])
+                    d = json.load(f)
+                out[d["zone"]] = int(d["serial"])
         return out
 
     # -- read path (transfers) ---------------------------------------
@@ -197,7 +204,7 @@ class ZoneStore:
 
     def file_size(self, zone: str) -> int:
         """Bytes of the zone's file (0 if not served): the size hint
-        the ``dns`` source packs its read partitions by."""
+        the ``dns`` source sizes and packs its read partitions by."""
         try:
             return os.path.getsize(self._path(zone))
         except FileNotFoundError:

@@ -11,14 +11,17 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql.datasource import EqualTo
 
-from spark_dns_spark.sources import register_all
+from spark_dns_spark.sources import dns_source, register_all
 from spark_dns_spark.sources.dns_source import (
+    BIN_BYTES,
     READ_SCHEMA,
     DnsBatchReader,
     DnsZonePartition,
     ZoneTransfer,
+    _plan,
     pack_transfers,
 )
+from spark_dns_spark.sources.transport import WireTransport
 from spark_dns_spark.sources.zonestore import ZoneNotFoundError, ZoneStore
 
 
@@ -342,9 +345,15 @@ def test_pack_transfers_is_largest_first_into_least_loaded():
     assert pack_transfers([], {}, 4) == []
 
 
-def test_batch_plan_packs_each_zone_once_into_at_most_parallelism(tmp_path):
+def test_batch_plan_packs_each_zone_once_into_at_most_parallelism(
+    tmp_path, monkeypatch
+):
     s = _zipf_store(str(tmp_path / "zones"))
     opts = {"store": s.root, "xfr": "axfr"}
+    # the real bin holds this sub-MB store whole
+    assert len(DnsBatchReader(opts, parallelism=4).partitions()) == 1
+    # one byte per bin: as many bins as parallelism allows
+    monkeypatch.setattr(dns_source, "BIN_BYTES", 1)
     reader = DnsBatchReader(opts, parallelism=4)
     parts = reader.partitions()
     assert len(parts) == 4
@@ -367,11 +376,11 @@ def test_zone_pushdown_prunes_before_packing(tmp_path):
     assert _zones(reader.partitions()) == [["z05.test."]]
 
 
-def test_read_plans_one_partition_per_core(spark, tmp_path):
+def test_read_of_a_small_store_plans_one_partition(spark, tmp_path):
     s = _zipf_store(str(tmp_path / "zones"))
     register_all(spark)
     df = spark.read.format("dns").option("store", s.root).option("xfr", "axfr").load()
-    assert df.rdd.getNumPartitions() == min(24, spark.sparkContext.defaultParallelism)
+    assert df.rdd.getNumPartitions() == 1
     assert df.count() == sum(len(s.axfr(z).rows) for z in s.zones())
 
 
@@ -424,5 +433,47 @@ def test_register_all_bakes_in_parallelism_and_conf(tmp_path):
     assert _zones(dns_reader({}).partitions()) == [["z01.test."]]
     session.sparkContext.defaultParallelism = 2
     register_all(session)
-    assert len(dns_reader({"zones": "z01.test.,z02.test.,z03.test."}).partitions()) == 2
+    assert dns_reader({"zones": "z01.test.,z02.test.,z03.test."}).parallelism == 2
     assert dns_reader({"zones": "z04.test."}).opts.zones == ["z04.test."]
+
+
+# -- read partitions sized by transfer work ------------------------------
+
+
+class _SizedTransport(WireTransport):
+    """A transport whose size hints are given, for planning only."""
+
+    def __init__(self, sizes: dict[str, int]):
+        super().__init__("stub")
+        self.sizes = sizes
+
+    def size_hint(self, zone: str) -> int:
+        return self.sizes[zone]
+
+
+def _axfrs(zones) -> list[ZoneTransfer]:
+    return [ZoneTransfer(z, 0, None, True) for z in zones]
+
+
+@pytest.mark.parametrize(
+    "nzones,total_bins,nbins",
+    [(24, 0, 1), (24, 0.5, 1), (24, 2.5, 3), (24, 10, 4), (2, 10, 2)],
+)
+def test_plan_sizes_bins_by_transfer_work(nzones, total_bins, nbins):
+    """One bin per BIN_BYTES of size hints (at least one), capped by
+    parallelism and by the zone count; each zone planned once."""
+    zones = [f"z{i:02d}.test." for i in range(nzones)]
+    sizes = dict.fromkeys(zones, int(total_bins * BIN_BYTES) // nzones)
+    parts = _plan(_SizedTransport(sizes), _axfrs(zones), 4)
+    assert len(parts) == nbins
+    assert sorted(z for b in _zones(parts) for z in b) == zones
+    assert len({p.batch_ts_us for p in parts}) == 1
+
+
+def test_plan_without_sizes_is_one_bin_per_zone_up_to_parallelism():
+    """A transport that knows no sizes (the wire) weighs each zone as
+    a full bin, so it plans min(#zones, parallelism) bins."""
+    wire = WireTransport("stub")
+    assert len(_plan(wire, _axfrs(["a.", "b."]), 4)) == 2
+    assert len(_plan(wire, _axfrs("abcdef"), 4)) == 4
+    assert _plan(wire, [], 4) == []

@@ -341,9 +341,13 @@ def test_admission_clock_crash_recovery(spark, store, tmp_path):
     assert out == {"example.acme.": 5}
 
 
-def test_stream_partitions_skip_unchanged_zones_and_pack_the_rest(tmp_path):
+def test_stream_partitions_skip_unchanged_zones_and_pack_the_rest(
+    tmp_path, monkeypatch
+):
     """A micro-batch plans only zones whose serial moved, each bounded
-    at its planned offsets, packed into at most ``parallelism`` bins."""
+    at its planned offsets, packed into at most ``parallelism`` bins
+    (one, for this few-kB batch)."""
+    from spark_dns_spark.sources import dns_source
     from spark_dns_spark.sources.dns_source import DnsStreamReader
 
     s = ZoneStore(str(tmp_path / "zones"))
@@ -352,6 +356,8 @@ def test_stream_partitions_skip_unchanged_zones_and_pack_the_rest(tmp_path):
     reader = DnsStreamReader({"store": s.root}, parallelism=2)
     start = {f"z{i}.test.": 1 for i in range(6)}
     end = {**start, "z1.test.": 3, "z2.test.": 2, "z4.test.": 5, "new.test.": 1}
+    assert len(reader.partitions(start, end)) == 1
+    monkeypatch.setattr(dns_source, "BIN_BYTES", 1)
     parts = reader.partitions(start, end)
     assert len(parts) == 2
     planned = sorted(t for p in parts for t in p.transfers)
@@ -363,3 +369,28 @@ def test_stream_partitions_skip_unchanged_zones_and_pack_the_rest(tmp_path):
     ]
     assert not any(t.axfr for t in planned)
     assert reader.partitions(start, start) == []
+
+
+def test_idle_poll_parses_each_zone_file_once(tmp_path, monkeypatch):
+    """latestOffset() without a `zones` option reads names and serials
+    from one listing: one parse per zone file, not a listing parse plus
+    a serial poll per zone."""
+    from spark_dns_spark.sources.dns_source import DnsStreamReader
+
+    s = ZoneStore(str(tmp_path / "zones"))
+    for i in range(6):
+        s.create_zone(f"z{i}.test.", records=[(f"h.z{i}.test.", f"10.0.0.{i}")])
+    s.apply_update("z3.test.", [("IXFR_ADD", "h2.z3.test.", "10.0.1.3")])
+    reader = DnsStreamReader({"store": s.root})
+    parsed = []
+    load = json.load
+
+    def counting_load(f, *a, **k):
+        if f.name.endswith(".zone.json"):
+            parsed.append(f.name)
+        return load(f, *a, **k)
+
+    monkeypatch.setattr(json, "load", counting_load)
+    offsets = reader.latestOffset()
+    assert len(parsed) == 6
+    assert offsets == {**{f"z{i}.test.": 1 for i in range(6)}, "z3.test.": 2}

@@ -16,6 +16,7 @@ import os
 import pytest
 
 from spark_dns_spark.sources.transport import (
+    BIN_BYTES,
     FileStoreTransport,
     WireTransport,
     parse_xfr_stream,
@@ -126,7 +127,8 @@ def test_size_hints(store):
     file_t, wire_t = _transports(store)
     assert file_t.size_hint(ZONE) == os.path.getsize(store._path(ZONE))
     assert file_t.size_hint("unserved.zone.") == 0
-    assert wire_t.size_hint(ZONE) == 1  # a server reports no sizes
+    # a server reports no sizes: a zone fills a read partition
+    assert wire_t.size_hint(ZONE) == BIN_BYTES
 
 
 # -- transport equivalence: same store state, same rows ---------------
