@@ -7,16 +7,24 @@ ROUND ?= rX
 SF_SMALL ?= /root/testdata/sf0.001
 SF_ORACLE ?= /root/testdata/sf0.01
 
-.PHONY: test oracle-full bench canary plan-audit all
+.PHONY: test perfbench-test oracle-full bench canary plan-audit all
 
-all: canary test oracle-full plan-audit bench
+all: canary test perfbench-test oracle-full plan-audit bench
 
 # seconds-fast environment-drift canary: run FIRST every round
 canary:
 	python -m pytest tests/test_env_canary.py -q
 
+# the tier-1 gate: sessions sized to this host's cores (get_session
+# defaults to local[32] otherwise)
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	SPARK_LOCAL_DIRS=/tmp/spark-local \
+	python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# the benchmark's own unit tests (generator replay vs the zone store)
+perfbench-test:
+	python3 -m pytest perfbench/tests -q
 
 # full-catalog cross-engine gate (every catalog query, ~6-8 min at sf0.01);
 # commit the artifact: make oracle-full ROUND=r6

@@ -1,5 +1,7 @@
-"""Format ``dns_update`` — batch + streaming write of update records to
-the zone store (SURVEY.md §2.1 S8–S10), on the Python DataSource API.
+"""Format ``dns_update`` — batch + streaming write of update records
+(SURVEY.md §2.1 S8–S10), on the Python DataSource API, through the
+same transport the ``dns`` source reads with (``transport.py``: the
+file-backed zone store, or RFC 2136 messages to a live server).
 
 Per-partition pipeline (the executor body of
 spark/write/DnsPartitionHandler.java:30-44 + DnsUpdate.java:46-81):
@@ -11,8 +13,9 @@ spark/write/DnsPartitionHandler.java:30-44 + DnsUpdate.java:46-81):
    (A2) — per-partition, exactly like the reference; :func:`send_updates`
    makes it global with one ``repartition(zone)`` (the documented
    improvement, SURVEY.md §4 shuffle row);
-5. one store update message per zone; unknown zone ⇒ raise (rcode!=0,
-   DnsUpdate.java:76-80) unless ``ignore-failures``.
+5. one ``transport.update`` message per zone; unknown zone ⇒ raise
+   (rcode!=0, DnsUpdate.java:76-80) unless ``ignore-failures``;
+   connection errors always raise.
 
 ``SaveMode``/``overwrite`` is ignored (DnsSinkRelationProvider.java:22-29).
 """
@@ -32,12 +35,12 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import Row, StructType
 
 from spark_dns_spark.sources.options import DnsOptions
+from spark_dns_spark.sources.transport import make_transport
 from spark_dns_spark.sources.zonestore import (
     AXFR,
     IXFR_ADD,
     IXFR_DELETE,
     ZoneNotFoundError,
-    ZoneStore,
 )
 
 #: ttl default quirk preserved: Duration.of(1h).toMillis() = 3_600_000
@@ -84,10 +87,6 @@ class DnsWriteCommit(WriterCommitMessage):
 
 class DnsUpdateWriter(DataSourceWriter):
     def __init__(self, options: dict):
-        # transport=wire: per-zone RFC 2136 UPDATE messages TCP-sent to
-        # a live server at store/server:port (the reference's only
-        # write path, DnsUpdate.java:46-81); transport=store (default):
-        # deterministic file-backed ZoneStore.
         self.opts = DnsOptions.parse(options)
 
     def write(self, iterator: Iterator[Row]) -> DnsWriteCommit:
@@ -122,16 +121,14 @@ class DnsUpdateWriter(DataSourceWriter):
         by_zone: dict[str, list] = {}
         for (action, fqdn, ip), ((ts, eid), row) in per_key.items():
             by_zone.setdefault(_zone_of(fqdn), []).append(
-                (ts, eid, action, fqdn, ip, _ttl(row))
+                (ts, eid, (action, fqdn, ip, _ttl(row)))
             )
 
-        store = None
-        if self.opts.transport == "store":
-            store = ZoneStore(self.opts.store)
-            # same TCP-client failure model as the read path (bad port ⇒
-            # refused); not suppressable here — the reference sink throws
-            # on any send failure (DnsUpdate.java:76-80)
-            store.check_connect(self.opts.port)
+        transport = make_transport(self.opts)
+        # same TCP-client failure model as the read path (bad port ⇒
+        # refused); not suppressable here — the reference sink throws
+        # on any send failure (DnsUpdate.java:76-80)
+        transport.check_connect()
         applied = []
         n = 0
         for zone in sorted(by_zone):
@@ -140,29 +137,9 @@ class DnsUpdateWriter(DataSourceWriter):
             # newer add for the same (fqdn, ip), violating the documented
             # most-recent-wins contract (README.md:119-121; the reference
             # is order-arbitrary here, we pin it to the feed order).
-            ordered = sorted(by_zone[zone])
+            ordered = [change for _, _, change in sorted(by_zone[zone])]
             try:
-                if store is not None:
-                    store.apply_update(
-                        zone, [(a, f, i) for (_, _, a, f, i, _t) in ordered]
-                    )
-                else:
-                    # one RFC 2136 message per zone, rcode!=0 ⇒ raise
-                    # (DnsUpdate.java:46-81); connection errors are
-                    # OSError, never suppressed — only unknown-zone
-                    # (NOTAUTH) falls under ignore-failures, exactly
-                    # like the file-store path.
-                    from spark_dns_spark.sources.update_wire import (  # noqa: PLC0415
-                        send_update,
-                    )
-
-                    send_update(
-                        self.opts.store,
-                        self.opts.port,
-                        self.opts.timeout,
-                        zone,
-                        [(a, f, i, t) for (_, _, a, f, i, t) in ordered],
-                    )
+                transport.update(zone, ordered)
             except ZoneNotFoundError:
                 if self.opts.ignore_failures:
                     continue

@@ -194,8 +194,6 @@ def _transfer_rows(opts: DnsSourceOptions, part: DnsZonePartition):
         raise
     for t in part.transfers:
         try:
-            if t.zone in opts.fail_zones:  # fault injection (tests, T7)
-                raise OSError(f"simulated transfer failure for {t.zone}")
             # transfer() serves from_serial==0 as a snapshot BOUNDED at
             # to_serial, so a streaming batch planned at [0, end] stays
             # pinned to its offsets even if the store advances before

@@ -43,7 +43,7 @@ def _get(options: dict, key: str, default=None):
 CONF_PREFIX = "spark.dns."
 CONF_KEYS = (
     "store", "server", "port", "timeout", "organization", "zones",
-    "xfr", "serial", "ignore-failures", "fail-zones",
+    "xfr", "serial", "ignore-failures",
     "max-kept-commits", "max-changes-per-batch", "transport",
 )
 #: Every key a reader or writer accepts: the conf-backed keys plus the
@@ -156,7 +156,6 @@ class DnsSourceOptions(DnsOptions):
     zones: list[str] = field(default_factory=list)
     xfr: str = XFR_IXFR
     serial: int = 0
-    fail_zones: list[str] = field(default_factory=list)  # test fault injection
     max_kept_commits: int = 10  # streaming progress retention (O2)
     #: Streaming admission control (kafka ``maxOffsetsPerTrigger``
     #: analog; the reference has no equivalent — a zone with a huge
@@ -182,11 +181,6 @@ class DnsSourceOptions(DnsOptions):
         serial = int(_get(options, "serial", 0))
         if serial < 0:
             raise OptionError(f"invalid serial: {serial}")
-        fail_zones = [
-            z.strip()
-            for z in str(_get(options, "fail-zones", "")).split(",")
-            if z.strip()
-        ]
         kept = int(_get(options, "max-kept-commits", 10))
         if kept <= 0:
             raise OptionError(f"invalid max-kept-commits: {kept}")
@@ -200,7 +194,6 @@ class DnsSourceOptions(DnsOptions):
             zones=zones,
             xfr=xfr,
             serial=serial,
-            fail_zones=fail_zones,
             max_kept_commits=kept,
             max_changes_per_batch=max_changes,
         )

@@ -1,19 +1,23 @@
-"""Zone-transfer transports — the seam between the ``dns`` source's
-planning/row logic and HOW bytes are fetched.
+"""DNS server transports — the one seam between the ``dns`` source's
+planning/row logic, the ``dns_update`` sink's per-zone messages, and
+HOW bytes reach a server.
 
-The reference's only transport is a live TCP DNS server via dnsjava
-(``xfr/Xfr.java:37-50``: always requests IXFR with the given serial,
-lets the handler detect whether the *answer* was AXFR- or IXFR-shaped,
-filters to A records, ``Xfr.java:76-81``).  This repo's default
-transport is the deterministic file-backed :class:`~spark_dns_spark.
-sources.zonestore.ZoneStore` (no live server in the harness —
-SURVEY.md §5); this module makes that choice explicit behind
-:class:`ZoneTransport` and adds :class:`WireTransport`, a
-dnspython-backed implementation of the same contract, so the engine can
-read a real zone wherever ``dnspython`` and a server exist.
+The reference reaches its server two ways, both over TCP via dnsjava:
+zone transfers (``xfr/Xfr.java:37-50``: always requests IXFR with the
+given serial, lets the handler detect whether the *answer* was AXFR- or
+IXFR-shaped, filters to A records, ``Xfr.java:76-81``) and DDNS updates
+(``spark/write/DnsUpdate.java:46-81``).  Here one :class:`ZoneTransport`
+object serves both formats, and :func:`make_transport` is the only
+place that picks it:
+
+- the deterministic file-backed :class:`~spark_dns_spark.sources.
+  zonestore.ZoneStore` (default; no live server in the harness —
+  SURVEY.md §5), registered as a :class:`ZoneTransport`;
+- :class:`WireTransport`: dnspython transfers and RFC 2136 UPDATE
+  messages (``update_wire.py``) against a real server.
 
 Both transports honor the same contract, unit-tested in
-``tests/test_transport.py``:
+``tests/test_transport.py`` and ``tests/test_dns_sink_wire.py``:
 
 - ``transfer(zone, 0, None, axfr=True)`` → full AXFR snapshot;
 - ``transfer(zone, n, hi, axfr=False)`` → deltas with
@@ -21,8 +25,11 @@ Both transports honor the same contract, unit-tested in
   fallback, classified by the ANSWER shape, not the request —
   SURVEY.md §7.3);
 - only A records ever become rows (P1);
-- connection errors surface as ``OSError`` (suppressable upstream via
-  ``ignore-failures``), unknown zones as :class:`ZoneNotFoundError`.
+- ``update(zone, changes)`` applies one message of ``(action, fqdn,
+  ip, ttl)`` changes;
+- connection errors surface as ``OSError`` (suppressable on reads via
+  ``ignore-failures``, never on writes), unknown zones as
+  :class:`ZoneNotFoundError`.
 
 ``WireTransport`` splits into a pure, fully-tested answer-stream parser
 (:func:`parse_xfr_stream` — RFC 5936/1995 record-stream shapes,
@@ -36,7 +43,8 @@ from __future__ import annotations
 from abc import ABC, abstractmethod
 from collections.abc import Callable, Sequence
 
-from spark_dns_spark.sources.options import DnsSourceOptions, OptionError
+from spark_dns_spark.sources.options import DnsOptions, OptionError
+from spark_dns_spark.sources.update_wire import UpdateRR, send_update
 from spark_dns_spark.sources.zonestore import (
     AXFR,
     IXFR_ADD,
@@ -60,12 +68,14 @@ BIN_BYTES = 16 << 20
 
 
 class ZoneTransport(ABC):
-    """What the ``dns`` source needs from any transfer mechanism."""
+    """What the ``dns`` source and the ``dns_update`` sink need from a
+    DNS server."""
 
     @abstractmethod
     def zones(self) -> list[str]:
         """Zones this endpoint serves (file store: directory listing;
-        wire: not discoverable — the ``zones`` option is required)."""
+        wire: not discoverable — raises ``OptionError``, so a read
+        must name its ``zones``)."""
 
     @abstractmethod
     def serial(self, zone: str) -> int:
@@ -82,6 +92,11 @@ class ZoneTransport(ABC):
         """Raise ``OSError`` for unreachable-server conditions that can
         be detected before/without a transfer (may be a no-op)."""
 
+    @abstractmethod
+    def update(self, zone: str, changes: list[UpdateRR]) -> None:
+        """Apply one update message of ``(action, fqdn, ip, ttl)``
+        changes, in order (see module contract)."""
+
     def serials(self) -> dict[str, int]:
         """``{zone: serial}`` of every zone :meth:`zones` lists."""
         return {z: self.serial(z) for z in self.zones()}
@@ -93,38 +108,9 @@ class ZoneTransport(ABC):
         return BIN_BYTES
 
 
-class FileStoreTransport(ZoneTransport):
-    """The deterministic default: file-backed simulated server."""
-
-    def __init__(self, root: str, port: int = 53, timeout: float = 10.0):
-        self.store = ZoneStore(root)
-        self.port = port
-        self.timeout = timeout
-
-    def zones(self) -> list[str]:
-        return self.store.zones()
-
-    def serial(self, zone: str) -> int:
-        return self.store.serial(zone)
-
-    def serials(self) -> dict[str, int]:
-        return self.store.serials()
-
-    def transfer(
-        self, zone: str, from_serial: int, to_serial: int | None, axfr: bool
-    ) -> TransferResult:
-        # the store serves from_serial==0 as a snapshot BOUNDED at
-        # to_serial, so a streaming batch planned at [0, end] stays
-        # pinned to its offsets even if the store advances first.
-        return self.store.transfer(
-            zone, from_serial, to_serial, axfr, self.timeout
-        )
-
-    def check_connect(self) -> None:
-        self.store.check_connect(self.port)
-
-    def size_hint(self, zone: str) -> int:
-        return self.store.file_size(zone)
+# ZoneStore lives below this module (it is imported here), so it joins
+# the contract by registration rather than by subclassing.
+ZoneTransport.register(ZoneStore)
 
 
 def parse_xfr_stream(
@@ -273,7 +259,13 @@ class WireTransport(ZoneTransport):
 
     # -- contract ------------------------------------------------------
     def zones(self) -> list[str]:
-        return []  # a server's zone list is not discoverable over DNS
+        # a server's zone list is not discoverable over DNS: without
+        # explicit zones a read would plan zero partitions / an empty
+        # offset map and "succeed" with no data (ADVICE r3).
+        raise OptionError(
+            "transport=wire requires the 'zones' option: a live "
+            "server cannot enumerate its zones"
+        )
 
     def serial(self, zone: str) -> int:
         return int(self._serial_wire(zone))
@@ -307,6 +299,11 @@ class WireTransport(ZoneTransport):
 
     def check_connect(self) -> None:
         pass  # connection errors surface on the transfer itself
+
+    def update(self, zone: str, changes: list[UpdateRR]) -> None:
+        # RFC 2136 messages, rcode!=0 ⇒ raise (DnsUpdate.java:46-81);
+        # NOTAUTH maps to ZoneNotFoundError like the file store's.
+        send_update(self.server, self.port, self.timeout, zone, changes)
 
     # -- dnspython wire (import-gated; not exercised in this container) -
     def _dnspython_wire(self, zone: str, serial: int) -> list[WireRR]:
@@ -359,22 +356,12 @@ class WireTransport(ZoneTransport):
         raise ZoneNotFoundError(f"no SOA answer for {zone}")
 
 
-def make_transport(opts: DnsSourceOptions) -> ZoneTransport:
-    """Build the transport the read options select.
-
-    ``transport=store`` (default) — :class:`FileStoreTransport` over
-    ``opts.store``; ``transport=wire`` — :class:`WireTransport` against
-    the host in ``opts.store``/``server`` on ``opts.port``.
-    """
+def make_transport(opts: DnsOptions) -> ZoneTransport:
+    """The transport the read or write options select — the only place
+    that chooses: ``transport=store`` (default) is the
+    :class:`ZoneStore` at ``opts.store``; ``transport=wire`` is a
+    :class:`WireTransport` against the host in ``opts.store``/``server``.
+    Both get ``opts.port`` and ``opts.timeout``."""
     if opts.transport == "wire":
-        if not opts.zones:
-            # a server's zone list is not discoverable over DNS:
-            # without explicit zones the source would plan zero
-            # partitions / an empty offset map and "succeed" with no
-            # data (ADVICE r3) — surface the constraint instead.
-            raise OptionError(
-                "transport=wire requires the 'zones' option: a live "
-                "server cannot enumerate its zones"
-            )
         return WireTransport(opts.store, port=opts.port, timeout=opts.timeout)
-    return FileStoreTransport(opts.store, port=opts.port, timeout=opts.timeout)
+    return ZoneStore(opts.store, port=opts.port, timeout=opts.timeout)

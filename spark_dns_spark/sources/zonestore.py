@@ -76,8 +76,15 @@ def _safe(zone: str) -> str:
 
 
 class ZoneStore:
-    def __init__(self, root: str):
+    """The file transport: a directory of zone files, served with the
+    :class:`~spark_dns_spark.sources.transport.ZoneTransport` contract
+    (``port``/``timeout`` model the TCP client's connect and transfer
+    failures)."""
+
+    def __init__(self, root: str, port: int = 53, timeout: float = 10.0):
         self.root = root
+        self.port = port
+        self.timeout = timeout
 
     def _path(self, zone: str) -> str:
         return os.path.join(self.root, f"{_safe(zone)}.zone.json")
@@ -158,9 +165,9 @@ class ZoneStore:
         d["transfer_delay"] = float(seconds)
         self._write_atomic(zone, d)
 
-    def check_connect(self, port: int) -> None:
+    def check_connect(self) -> None:
         """Model the TCP-client connect failure the reference's tests
-        exercise (bad port → connection refused;
+        exercise (bad ``port`` → connection refused;
         DnsSourceRelationProviderTest.java:86-147).  The slow-transfer
         timeout is part of :meth:`transfer`, like a real client's."""
         try:
@@ -168,9 +175,9 @@ class ZoneStore:
                 server_port = int(json.load(f)["port"])
         except FileNotFoundError:
             server_port = None
-        if server_port is not None and int(port) != server_port:
+        if server_port is not None and int(self.port) != server_port:
             raise OSError(
-                f"connection refused: port {port} "
+                f"connection refused: port {self.port} "
                 f"(server listens on {server_port})"
             )
 
@@ -202,7 +209,7 @@ class ZoneStore:
         (ZoneOffset.java:12-16)."""
         return int(self._load(zone)["serial"])
 
-    def file_size(self, zone: str) -> int:
+    def size_hint(self, zone: str) -> int:
         """Bytes of the zone's file (0 if not served): the size hint
         the ``dns`` source sizes and packs its read partitions by."""
         try:
@@ -216,7 +223,6 @@ class ZoneStore:
         from_serial: int,
         to_serial: int | None,
         axfr: bool,
-        timeout: float,
     ) -> TransferResult:
         """One transfer as the simulated server answers it: AXFR when
         ``axfr`` and unbounded, else :meth:`ixfr`.  A zone whose
@@ -224,9 +230,9 @@ class ZoneStore:
         raises ``OSError`` — no real sleep."""
         d = self._load(zone)
         delay = float(d.get("transfer_delay", 0))
-        if delay and delay >= timeout:
+        if delay and delay >= self.timeout:
             raise OSError(
-                f"transfer of {zone} timed out after {timeout}s "
+                f"transfer of {zone} timed out after {self.timeout}s "
                 f"(simulated RTT {delay}s)"
             )
         if axfr and to_serial is None:
@@ -262,6 +268,11 @@ class ZoneStore:
         return _ixfr_doc(self._load(zone), from_serial, to_serial)
 
     # -- write path (DDNS update) ------------------------------------
+    def update(self, zone: str, changes: list[tuple[str, str, str, int]]) -> None:
+        """One update message of ``(action, fqdn, ip, ttl)`` changes;
+        the store keeps no TTLs (see :meth:`apply_update`)."""
+        self.apply_update(zone, [(a, f, i) for a, f, i, _ttl in changes])
+
     def apply_update(self, zone: str, changes: list[tuple[str, str, str]]) -> int:
         """Apply one update message: (action, fqdn, ip) changes; adds
         (AXFR/IXFR_ADD) insert the record, IXFR_DELETE removes it.

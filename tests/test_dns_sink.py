@@ -175,6 +175,33 @@ def test_write_to_unknown_zone_raises(spark, store):
         ).save()
 
 
+@pytest.mark.parametrize("fault", ["bad-port", "unknown-zone"])
+def test_store_sink_failure_model(spark, store, fault):
+    """ignore-failures on a write skips unknown zones only: a refused
+    connection raises anyway (DnsUpdate.java:76-80), while an unknown
+    zone is skipped and the known zone beside it still applies."""
+    store.set_server(port=53)
+    ts = dt.datetime(2024, 1, 1)
+    rows = [("IXFR_ADD", "ok.example.acme", "2.2.2.2", ts, 1)]
+    if fault == "unknown-zone":
+        rows.append(("IXFR_ADD", "a.no.such.zone", "1.1.1.1", ts, 1))
+    register_all(spark)
+    write = (
+        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.format("dns_update")
+        .option("store", store.root)
+        .option("port", "5353" if fault == "bad-port" else "53")
+        .option("ignore-failures", "true")
+        .mode("append")
+    )
+    if fault == "bad-port":
+        with pytest.raises(Exception, match="connection refused"):
+            write.save()
+        assert store.resolve("example.acme.", "ok.example.acme.") == []
+    else:
+        write.save()
+        assert store.resolve("example.acme.", "ok.example.acme.") == ["2.2.2.2"]
+
+
 def test_write_invalid_rows_raise(spark, store):
     register_all(spark)
     cases = [

@@ -26,7 +26,8 @@ from spark_dns_spark.sources.update_wire import (
     parse_update_response,
     send_update,
 )
-from spark_dns_spark.sources.zonestore import ZoneStore
+from spark_dns_spark.sources.transport import WireTransport
+from spark_dns_spark.sources.zonestore import ZoneNotFoundError, ZoneStore
 
 SCHEMA = "action string, fqdn string, ip string, timestamp timestamp, ttl int"
 
@@ -207,6 +208,36 @@ def test_wire_nonzero_rcode_raises(spark, tmp_path):
             )
     finally:
         server.close()
+
+
+def test_update_contract_matches_across_transports(wire, tmp_path):
+    """ZoneTransport.update without Spark: one add/delete sequence
+    through the file store and through RFC 2136 messages to the
+    loopback server leaves the same records; an unknown zone raises
+    ZoneNotFoundError on both."""
+    server, zstore = wire
+    direct = ZoneStore(str(tmp_path / "direct"))
+    direct.create_zone("example.acme.", records=[], serial=1)
+    steps = [
+        [("IXFR_ADD", "a.example.acme.", "10.0.0.1", 60),
+         ("AXFR", "b.example.acme.", "10.0.0.2", 60)],
+        [("IXFR_DELETE", "a.example.acme.", "10.0.0.1", 0),
+         ("IXFR_ADD", "a.example.acme.", "10.0.0.3", 60),
+         ("IXFR_ADD", "b.example.acme.", "10.0.0.4", 60)],
+    ]
+    transports = (direct, WireTransport("127.0.0.1", port=server.port))
+    for changes in steps:
+        for t in transports:
+            t.update("example.acme.", changes)
+    for fqdn in ("a.example.acme.", "b.example.acme."):
+        assert direct.resolve("example.acme.", fqdn) == zstore.resolve(
+            "example.acme.", fqdn
+        )
+    assert zstore.resolve("example.acme.", "a.example.acme.") == ["10.0.0.3"]
+    assert direct.serial("example.acme.") == zstore.serial("example.acme.") == 3
+    for t in transports:
+        with pytest.raises(ZoneNotFoundError):
+            t.update("no.such.zone.", steps[0])
 
 
 def test_wire_connection_refused_raises():

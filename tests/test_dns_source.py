@@ -136,12 +136,12 @@ def test_unreachable_zone_ignore_failures_empty(spark, store):
 
 
 def test_fail_zones_injection_matrix(spark, store):
-    df = _read(spark, store, zones="example.acme.,another.zone.",
-               xfr="axfr", fail_zones="example.acme.")
-    with pytest.raises(Exception, match="simulated transfer failure"):
+    store.set_transfer_delay("example.acme.", 30.0)  # past the 10 s timeout
+    df = _read(spark, store, zones="example.acme.,another.zone.", xfr="axfr")
+    with pytest.raises(Exception, match="timed out"):
         df.collect()
     df2 = _read(spark, store, zones="example.acme.,another.zone.",
-                xfr="axfr", fail_zones="example.acme.", ignore_failures="true")
+                xfr="axfr", ignore_failures="true")
     assert df2.count() == 5  # failing zone suppressed, healthy zone intact
 
 
@@ -181,8 +181,8 @@ def test_user_schema_is_rejected(spark, store):
 def test_zone_filter_pushdown_prunes_partitions(spark, store):
     # beyond-reference: EqualTo('zone') prunes before any transfer; a
     # poisoned other-zone proves it never ran
-    df = _read(spark, store, zones="example.acme.,another.zone.",
-               xfr="axfr", fail_zones="another.zone.")
+    store.set_transfer_delay("another.zone.", 30.0)
+    df = _read(spark, store, zones="example.acme.,another.zone.", xfr="axfr")
     good = df.filter(df.zone == "example.acme.")
     assert good.count() == 3  # would raise if another.zone. were scanned
 
@@ -221,6 +221,10 @@ def test_option_validation_errors(spark, store):
         DnsSourceOptions.parse({"store": "/x", "zone": "a."})
     with pytest.raises(OptionError, match="unknown option: ignore_failures"):
         DnsSourceOptions.parse({"store": "/x", "ignore_failures": "true"})
+    # the fault-injection option is gone: the store's set_transfer_delay
+    # injects the same OSError
+    with pytest.raises(OptionError, match="unknown option: fail-zones"):
+        DnsSourceOptions.parse({"store": "/x", "fail-zones": "a."})
     # a keyword send_updates no longer has reaches the writer and fails
     from spark_dns_spark.sources.dns_sink import send_updates
 
@@ -384,14 +388,12 @@ def test_read_of_a_small_store_plans_one_partition(spark, tmp_path):
     assert df.count() == sum(len(s.axfr(z).rows) for z in s.zones())
 
 
-@pytest.mark.parametrize("fault", ["fail-zones", "missing", "timeout"])
+@pytest.mark.parametrize("fault", ["missing", "timeout"])
 def test_failing_zone_does_not_empty_its_partition(store, fault):
     """ignore-failures suppresses per zone: the healthy zone packed
     after a failing one in the same partition still delivers."""
     bad = "nonexistent.zone." if fault == "missing" else "example.acme."
     opts = {"store": store.root, "xfr": "axfr", "zones": f"{bad},another.zone."}
-    if fault == "fail-zones":
-        opts["fail-zones"] = bad
     if fault == "timeout":
         store.set_transfer_delay(bad, 30.0)
     assert len(DnsBatchReader(opts, parallelism=1).partitions()) == 1

@@ -1,12 +1,13 @@
 """Transport-seam tests (VERDICT r2 item 7): the `dns` source's
 transfer semantics behind :class:`ZoneTransport`, verified for BOTH the
-file-store default and the dnspython-backed :class:`WireTransport`
-(wire injected — no dnspython / live server in this container).
+file-store default (:class:`ZoneStore` itself) and the
+dnspython-backed :class:`WireTransport` (wire injected — no dnspython /
+live server in this container).
 
 The fake wire emulates a real server's answer streams (RFC 5936 AXFR /
 RFC 1995 IXFR record shapes) straight from a ZoneStore's state, so the
 equivalence tests prove: for the same zone history, WireTransport's
-parsed rows == FileStoreTransport's rows, transfer for transfer.
+parsed rows == the ZoneStore's own rows, transfer for transfer.
 """
 
 from __future__ import annotations
@@ -17,8 +18,8 @@ import pytest
 
 from spark_dns_spark.sources.transport import (
     BIN_BYTES,
-    FileStoreTransport,
     WireTransport,
+    ZoneTransport,
     parse_xfr_stream,
 )
 from spark_dns_spark.sources.zonestore import (
@@ -89,7 +90,7 @@ def store(tmp_path):
 
 
 def _transports(store):
-    file_t = FileStoreTransport(store.root)
+    file_t = ZoneStore(store.root)
     wire_t = WireTransport(
         "dns.example",
         wire=fake_wire(store, ZONE),
@@ -117,7 +118,7 @@ def test_file_store_transfer_parses_the_zone_once(
     monkeypatch.setattr(
         ZoneStore, "_load", lambda self, z: loads.append(z) or load(self, z)
     )
-    t = FileStoreTransport(store.root)
+    t = ZoneStore(store.root)
     t.check_connect()
     t.transfer(ZONE, from_serial, to_serial, axfr)
     assert loads == [ZONE]
@@ -285,26 +286,58 @@ def test_wire_transport_without_dnspython_raises():
         t.serial(ZONE)
 
 
+def test_zone_store_is_a_zone_transport(store):
+    """ZoneStore joins the contract by registration, which checks
+    nothing: pin that it defines every abstract method."""
+    assert isinstance(store, ZoneTransport)
+    missing = {
+        m for m in ZoneTransport.__abstractmethods__
+        if not callable(getattr(ZoneStore, m, None))
+    }
+    assert not missing
+
+
 def test_make_transport_selects(tmp_path):
-    from spark_dns_spark.sources.options import DnsSourceOptions
+    from spark_dns_spark.sources.options import DnsOptions, DnsSourceOptions
     from spark_dns_spark.sources.transport import make_transport
 
-    o1 = DnsSourceOptions.parse({"store": str(tmp_path)})
-    assert isinstance(make_transport(o1), FileStoreTransport)
+    o1 = DnsSourceOptions.parse(
+        {"store": str(tmp_path), "port": "5353", "timeout": "3"}
+    )
+    t = make_transport(o1)
+    assert isinstance(t, ZoneStore)
+    assert (t.root, t.port, t.timeout) == (str(tmp_path), 5353, 3.0)
     o2 = DnsSourceOptions.parse(
         {"store": "dns.example", "transport": "wire", "zones": ZONE}
     )
     t = make_transport(o2)
     assert isinstance(t, WireTransport)
     assert t.server == "dns.example" and t.port == 53
+    # the sink's options carry no zones; a wire writer needs none
+    o3 = DnsOptions.parse({"store": "dns.example", "transport": "wire"})
+    assert isinstance(make_transport(o3), WireTransport)
 
 
-def test_make_transport_wire_requires_zones():
+def test_make_transport_wire_requires_zones(tmp_path):
     """transport=wire with no zones would plan zero partitions and
-    silently succeed with no data (ADVICE r3) — must raise instead."""
-    from spark_dns_spark.sources.options import DnsSourceOptions, OptionError
-    from spark_dns_spark.sources.transport import make_transport
+    silently succeed with no data (ADVICE r3) — the batch and streaming
+    readers must raise at planning instead."""
+    from spark_dns_spark.sources.dns_source import (
+        DnsBatchReader,
+        DnsStreamReader,
+    )
+    from spark_dns_spark.sources.options import OptionError
 
-    o = DnsSourceOptions.parse({"store": "dns.example", "transport": "wire"})
-    with pytest.raises(OptionError, match="requires the 'zones' option"):
-        make_transport(o)
+    opts = {"store": "dns.example", "transport": "wire"}
+    match = "requires the 'zones' option"
+    with pytest.raises(OptionError, match=match):
+        WireTransport("dns.example").zones()
+    with pytest.raises(OptionError, match=match):
+        DnsBatchReader(opts).partitions()
+    stream = DnsStreamReader({**opts, "progress-dir": str(tmp_path / "p")})
+    with pytest.raises(OptionError, match=match):
+        stream.initialOffset()
+    with pytest.raises(OptionError, match=match):
+        stream.latestOffset()
+    # with zones named, planning never asks the server for its list
+    assert DnsBatchReader({**opts, "zones": ZONE}).partitions()
