@@ -7,7 +7,7 @@ ROUND ?= rX
 SF_SMALL ?= /root/testdata/sf0.001
 SF_ORACLE ?= /root/testdata/sf0.01
 
-.PHONY: test perfbench-test oracle-full bench canary plan-audit all
+.PHONY: test perfbench-test perf-ab oracle-full bench canary plan-audit all
 
 all: canary test perfbench-test oracle-full plan-audit bench
 
@@ -25,6 +25,14 @@ test:
 # the benchmark's own unit tests (generator replay vs the zone store)
 perfbench-test:
 	python3 -m pytest perfbench/tests -q
+
+# interleaved A/B of one benchmark workload: BASE (a git revision,
+# exported with git archive) against the working tree, PAIRS seeds
+BASE ?= HEAD
+WORKLOAD ?= ddns_cdc
+PAIRS ?= 10
+perf-ab:
+	python tools/perf_ab.py --base $(BASE) --workload $(WORKLOAD) --pairs $(PAIRS)
 
 # full-catalog cross-engine gate (every catalog query, ~6-8 min at sf0.01);
 # commit the artifact: make oracle-full ROUND=r6

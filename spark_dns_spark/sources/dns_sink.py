@@ -11,8 +11,9 @@ spark/write/DnsPartitionHandler.java:30-44 + DnsUpdate.java:46-81):
 3. group by zone derived from fqdn (A1/F5);
 4. latest-wins dedup on (action, fqdn, ip) by (timestamp, event_id)
    (A2) — per-partition, exactly like the reference; :func:`send_updates`
-   makes it global with one ``repartition(zone)`` (the documented
-   improvement, SURVEY.md §4 shuffle row);
+   makes it global (the documented improvement, SURVEY.md §4 shuffle
+   row): it runs this body through ``foreachPartition`` after one
+   ``repartition(zone)``;
 5. one ``transport.update`` message per zone; unknown zone ⇒ raise
    (rcode!=0, DnsUpdate.java:76-80) unless ``ignore-failures``;
    connection errors always raise.
@@ -34,7 +35,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import Row, StructType
 
-from spark_dns_spark.sources.options import DnsOptions
+from spark_dns_spark.sources.options import DnsOptions, apply_defaults, conf_snapshot
 from spark_dns_spark.sources.transport import make_transport
 from spark_dns_spark.sources.zonestore import (
     AXFR,
@@ -183,8 +184,6 @@ class DnsUpdateDataSource(DataSource):
     _conf_defaults: dict = {}
 
     def _resolved_options(self) -> dict:
-        from spark_dns_spark.sources.options import apply_defaults  # noqa: PLC0415
-
         return apply_defaults(self.options, self._conf_defaults)
 
     def writer(self, schema: StructType, overwrite: bool) -> DnsUpdateWriter:
@@ -197,17 +196,32 @@ class DnsUpdateDataSource(DataSource):
         return DnsUpdateStreamWriter(self._resolved_options())
 
 
-def send_updates(df: DataFrame, store: str, **options):
-    """Driver-side write helper with the *global* dedup fix (SURVEY.md
-    §4): normalize fqdn → zone-tag → ``repartition(zone)`` → ``dns_update``
-    write.  The zone is a function of the normalized fqdn, so every
-    ``(action, fqdn, ip)`` key lands in one task and the writer's
-    per-partition latest-wins is already global.
-    """
-    from spark_dns_spark.operators import changelog as cl
+def send_updates(df: DataFrame, store: str, **options) -> None:
+    """Send ``df``'s update rows to the zones of ``store``, deduplicated
+    latest-wins across the whole input (the global dedup fix,
+    SURVEY.md §4).
 
-    out = cl.group_updates_by_zone(cl.normalize_updates(df)).repartition("zone")
-    writer = out.drop("zone").write.format("dns_update").option("store", store)
-    for k, v in options.items():
-        writer = writer.option(k.replace("_", "-"), str(v))
-    writer.mode("append").save()
+    One :class:`DnsUpdateWriter` is built on the driver from the
+    session's ``spark.dns.*`` conf as read at call time (not the
+    snapshot ``register_all`` gave the ``dns_update`` format), with
+    ``store`` and ``options`` (``_`` spelled ``-``) winning.  Its
+    ``write`` runs in Spark's tasks through ``foreachPartition``, as
+    the reference's sink does, so a batch makes no DataSource planner
+    calls.
+
+    The writer dedups per task, so every ``(action, fqdn, ip)`` key must
+    reach one task: the rows are tagged with the zone of their
+    lower-cased fqdn and shuffled once on it (``repartition(zone)``).
+    The zone is a function of the key, so each key's rows share a task.
+    """
+    from pyspark.sql import functions as F
+
+    from spark_dns_spark.functions.dnsfn import zone_from_fqdn
+
+    opts = {"store": store}
+    opts.update({k.replace("_", "-"): str(v) for k, v in options.items()})
+    # parses (and rejects unknown keys) before any Spark job runs
+    writer = DnsUpdateWriter(apply_defaults(opts, conf_snapshot(df.sparkSession)))
+    zone = zone_from_fqdn(F.lower("fqdn"))
+    df = df.withColumn("zone", zone).repartition("zone").drop("zone")
+    df.rdd.foreachPartition(writer.write)

@@ -78,11 +78,9 @@ def test_send_updates_global_dedup(spark, store):
     df = spark.createDataFrame(rows, SCHEMA).repartition(2)
     register_all(spark)
     send_updates(df, store.root)
-    # record identity (action,fqdn,ip) differs → both survive dedup and
-    # both apply; the delete happens to land after the add alphabetically?
-    # No — actions are distinct identities, both messages applied to the
-    # same zone message sorted by action: IXFR_ADD < IXFR_DELETE, so the
-    # add applies then the delete: resolves to nothing.
+    # the identities (action, fqdn, ip) differ, so both survive the dedup
+    # and go out in one zone message in timestamp order: the add, then
+    # the newer delete, so the name resolves to nothing.
     assert store.resolve("example.acme.", "h.example.acme.") == []
 
 
@@ -144,22 +142,165 @@ def test_send_updates_invalid_shadowed_row_raises(spark, store, older):
 
 
 def test_send_updates_single_exchange(spark, store, monkeypatch):
-    """The send path shuffles once, on the zone: no window and no
-    exchange on the (action, fqdn, ip) key before the write."""
-    from pyspark.sql.readwriter import DataFrameWriter
+    """A multi-partition input shuffles once, on the zone: no window
+    and no exchange on the (action, fqdn, ip) key before the write."""
+    store.apply_update(
+        "example.acme.",
+        [("IXFR_ADD", f"host{i}.example.acme.", f"127.0.0.{i}") for i in range(5, 10)],
+    )
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    sent = []
-    monkeypatch.setattr(DataFrameWriter, "save", lambda w, *a, **k: sent.append(w._df))
     df = spark.createDataFrame(_update_rows(), SCHEMA)
+    assert df.rdd.getNumPartitions() > 1
+    # send_updates runs its writer on one DataFrame's .rdd (a
+    # cached_property): record that DataFrame's physical plan
+    rdd, plans = DataFrame.rdd, []
+
+    def _rdd(d):
+        plans.append(d._jdf.queryExecution().executedPlan().toString())
+        return rdd.func(d)
+
+    monkeypatch.setattr(DataFrame, "rdd", property(_rdd))
     send_updates(df, store.root)
-    (out,) = sent
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    (plan,) = plans
     exchanges = [ln for ln in plan.splitlines() if "Exchange " in ln]
     assert len(exchanges) == 1, plan
     assert "hashpartitioning(zone#" in exchanges[0], plan
     assert "REPARTITION_BY_COL" in exchanges[0], plan
     assert "ENSURE_REQUIREMENTS" not in plan, plan
     assert "Window" not in plan, plan
+    for i in range(5):
+        assert store.resolve("example.acme.", f"host{i}.example.acme.") == [
+            f"127.0.0.{i}"
+        ]
+    for i in range(5, 10):
+        assert store.resolve("example.acme.", f"host{i}.example.acme.") == []
+
+
+def test_send_updates_one_partition_dedup(spark, store):
+    """Duplicates in other spellings and timestamps in a one-partition
+    input collapse to the latest per (action, fqdn, ip), applied in
+    timestamp order."""
+    base = dt.datetime(2024, 1, 1)
+
+    def at(minutes):
+        return base + dt.timedelta(minutes=minutes)
+
+    rows = [
+        ("IXFR_ADD", "h.example.acme", "6.6.6.6", at(0), 1),
+        ("IXFR_DELETE", "H.Example.Acme.", "6.6.6.6", at(1), 1),
+        ("IXFR_ADD", "H.EXAMPLE.ACME", "6.6.6.6", at(4), 1),
+        ("IXFR_DELETE", "h.example.ACME", "6.6.6.6", at(3), 1),
+        ("IXFR_ADD", "h.Example.acme.", "6.6.6.6", at(2), 1),
+        ("IXFR_ADD", "G.example.acme", "7.7.7.7", at(5), 1),
+        ("IXFR_ADD", "g.example.acme.", "7.7.7.7", at(1), 1),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+    send_updates(df, store.root)
+    assert store.resolve("example.acme.", "h.example.acme.") == ["6.6.6.6"]
+    assert store.resolve("example.acme.", "g.example.acme.") == ["7.7.7.7"]
+    # one message: the latest of each key, in timestamp order
+    assert store.serial("example.acme.") == 2
+    assert store.ixfr("example.acme.", 1).rows == [
+        ("IXFR_DELETE", "h.example.acme.", "6.6.6.6"),
+        ("IXFR_ADD", "h.example.acme.", "6.6.6.6"),
+        ("IXFR_ADD", "g.example.acme.", "7.7.7.7"),
+    ]
+
+
+def test_send_updates_reads_session_conf(spark, store):
+    """spark.dns.* conf fills the options send_updates leaves out, as it
+    does for the dns_update format; an explicit option wins.  The conf
+    is read when send_updates is called, so a key set after
+    register_all reaches send_updates but not the format, which keeps
+    the snapshot register_all took."""
+    ts = dt.datetime(2024, 1, 1)
+    rows = [
+        ("IXFR_ADD", "ok.example.acme", "2.2.2.2", ts, 1),
+        ("IXFR_ADD", "a.no.such.zone", "1.1.1.1", ts, 1),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
+    register_all(spark)
+    spark.conf.set("spark.dns.ignore-failures", "true")
+    try:
+        with pytest.raises(Exception, match="zone not served"):
+            df.write.format("dns_update").option("store", store.root).mode(
+                "append"
+            ).save()
+        send_updates(df, store.root)
+        assert store.resolve("example.acme.", "ok.example.acme.") == ["2.2.2.2"]
+        with pytest.raises(Exception, match="zone not served"):
+            send_updates(df, store.root, ignore_failures=False)
+    finally:
+        spark.conf.unset("spark.dns.ignore-failures")
+
+
+def test_send_updates_unknown_option_raises_before_a_job(spark, store):
+    from spark_dns_spark.sources.options import OptionError
+
+    sc = spark.sparkContext
+    group = "send-updates-unknown-option"
+    df = spark.createDataFrame(_update_rows(), SCHEMA)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        with pytest.raises(OptionError, match="unknown option: global-dedup"):
+            send_updates(df, store.root, global_dedup=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert store.serial("example.acme.") == 1
+
+
+@pytest.mark.parametrize("parts", [1, 2])
+@pytest.mark.parametrize(
+    "bad",
+    [
+        ("IXFR_ADD", "", "1.1.1.1", dt.datetime(2024, 1, 1), 1),
+        ("IXFR_ADD", "a.example.acme", " ", dt.datetime(2024, 1, 1), 1),
+        ("BOGUS", "a.example.acme", "1.1.1.1", dt.datetime(2024, 1, 1), 1),
+    ],
+    ids=["empty-fqdn", "blank-ip", "action"],
+)
+def test_send_updates_invalid_row_raises(spark, store, bad, parts):
+    """P4 holds for one- and multi-partition input: the writer sees the
+    rows as given, so an empty fqdn is not turned into '.' by the zone
+    exchange."""
+    good = ("IXFR_ADD", "b.example.acme", "1.1.1.1", dt.datetime(2024, 1, 1), 1)
+    df = spark.createDataFrame([good, bad], SCHEMA)
+    df = df.coalesce(1) if parts == 1 else df.repartition(parts)
+    with pytest.raises(Exception, match="invalid update"):
+        send_updates(df, store.root)
+
+
+def test_send_updates_without_register_all(spark, store):
+    """send_updates needs no registered format: a session that never
+    ran register_all can still send."""
+    fresh = spark.newSession()
+    df = fresh.createDataFrame(_update_rows()[:5], SCHEMA)
+    with pytest.raises(Exception, match="DATA_SOURCE_NOT_FOUND"):
+        df.write.format("dns_update").option("store", store.root).mode(
+            "append"
+        ).save()
+    send_updates(df, store.root)
+    for i in range(5):
+        assert store.resolve("example.acme.", f"host{i}.example.acme.") == [
+            f"127.0.0.{i}"
+        ]
+
+
+def test_send_updates_empty_input(spark, store):
+    """An empty input still runs one write task after the zone
+    exchange, with or without input partitions, so the port is checked
+    as the dns_update format's write checks it."""
+    store.set_server(port=53)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(), SCHEMA)
+    assert empty.rdd.getNumPartitions() == 0
+    one_empty = spark.createDataFrame([], SCHEMA).coalesce(1)
+    for df in (empty, one_empty):
+        with pytest.raises(Exception, match="connection refused"):
+            send_updates(df, store.root, port=5353)
+    send_updates(empty, store.root, port=53)
+    assert store.serial("example.acme.") == 1
 
 
 def test_write_to_unknown_zone_raises(spark, store):

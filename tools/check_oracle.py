@@ -15,6 +15,7 @@ if it is bit-deterministic across engines (use the floor-round tricks
 from the catalog conventions, never bare ``round()`` on a blend).
 
 Usage:  python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
+        python tools/check_oracle.py --help
 
 ``--json`` writes a per-query artifact in the driver's CORRECTNESS
 shape (rows/schema/hash matches + row counts) so the FULL catalog's
@@ -24,6 +25,7 @@ cross-engine result can be committed each round regardless of which
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import math
 import sys
@@ -41,6 +43,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb  # noqa: E402
 
+
+#: sf dir checked when none is given (the sf0.01 test data, TESTDATA.md)
+DEFAULT_SF_DIR = "/root/testdata/sf0.01"
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -277,13 +282,24 @@ def run(sf_dir: str, only: list[str], json_out: str | None = None) -> int:
     return 1 if failed else 0
 
 
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(
+        description="Run catalog queries on Spark and their oracle SQL on "
+        "DuckDB over one sf dir, and compare the results."
+    )
+    ap.add_argument("--json", default=None, metavar="OUT",
+                    help="write a per-query artifact in the CORRECTNESS shape")
+    ap.add_argument("sf_dir", nargs="?",
+                    help=f"data directory (default: {DEFAULT_SF_DIR}); a "
+                    "first argument that is not a directory is a query name")
+    ap.add_argument("queries", nargs="*", help="query names (default: all)")
+    args = ap.parse_args(argv)
+    only = list(args.queries)
+    if args.sf_dir is not None and not Path(args.sf_dir).is_dir():
+        only.insert(0, args.sf_dir)
+        args.sf_dir = None
+    return run(args.sf_dir or DEFAULT_SF_DIR, only, args.json)
+
+
 if __name__ == "__main__":
-    args = sys.argv[1:]
-    json_out = None
-    if "--json" in args:
-        i = args.index("--json")
-        json_out = args[i + 1]
-        del args[i : i + 2]
-    sf_dir = args[0] if args and Path(args[0]).is_dir() else "/root/testdata/sf0.01"
-    only = args[1:] if args and Path(args[0]).is_dir() else args
-    sys.exit(run(sf_dir, only, json_out))
+    sys.exit(main())
